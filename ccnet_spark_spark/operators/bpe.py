@@ -61,7 +61,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import release_local_checkpoint
+from ..session import local_frame, release_local_checkpoint
 
 
 def build_word_vocab(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -185,8 +185,8 @@ def train_bpe(
         # free the previous round's blocks so executor storage holds ONE
         # vocab copy, not one per round
         release_local_checkpoint(prev)
-    merges_df = spark.createDataFrame(
-        merges, "rank int, left string, right string, merged string, pair_count long"
+    merges_df = local_frame(
+        spark, merges, "rank int, left string, right string, merged string, pair_count long"
     )
     vocab_df = vocab.select("word", F.array_join(F.col("sym"), " ").alias("symbols"), "freq")
     return merges_df, vocab_df

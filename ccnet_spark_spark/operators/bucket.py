@@ -6,7 +6,9 @@ The reference folds a driver-side {lang: (head, tail)} dict into a literal
 (north_rule mandate) — cleaner plan, cutoffs updatable without re-compiling
 the query, and identical semantics: pp < head -> head, pp < tail -> middle,
 else tail; null/negative pp or unknown lang -> "all" (reference default arm
-at pipe_line.py:322-323).
+at pipe_line.py:322-323). The cutoff table is still broadcast, now as a
+local relation (session.local_frame): its rows sit in the plan, so the
+broadcast runs no job and starts no Python worker.
 """
 
 from __future__ import annotations
@@ -17,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schema import CUTOFFS_SCHEMA
+from ..session import local_frame
 
 # Stub-language cutoffs calibrated on the synthetic corpus (fixtures/cutoffs.csv
 # mirrors the reference's cutoff.csv percentile semantics: head = 30th
@@ -58,7 +61,7 @@ def load_cutoffs(spark: SparkSession, csv_path: str | None = None, cutoffs: dict
                 rows.append((rec["lang"], float(rec["pp_head"]), float(rec["pp_tail"])))
     else:
         rows = [(lang, float(h), float(t)) for lang, (h, t) in sorted(cutoffs.items())]
-    return spark.createDataFrame(rows, schema=CUTOFFS_SCHEMA)
+    return local_frame(spark, rows, CUTOFFS_SCHEMA)
 
 
 def with_bucket(df: DataFrame, cutoffs_df: DataFrame, pp_col: str = "perplexity") -> DataFrame:

@@ -11,6 +11,7 @@ otherwise — plumbing, schema and batch shape are real and tested).
 
 from __future__ import annotations
 
+import itertools
 from typing import Iterator
 
 import numpy as np
@@ -298,7 +299,8 @@ def caption_embedding(df: DataFrame, dim: int = 64, text_col: str = "caption") -
 # ~1 blake2b per token OCCURRENCE), so each unique token is hashed once
 # per long-lived Python worker. The digest is a pure function of the
 # token, so the accumulated vector is bit-identical; the cap bounds
-# memory on adversarial vocabularies.
+# memory on adversarial vocabularies. On overflow the older half goes
+# (dict insertion order), so the recent working vocabulary stays warm.
 _TOK_DIGEST_CACHE: dict[str, int] = {}
 _TOK_DIGEST_CACHE_MAX = 1 << 20
 
@@ -309,7 +311,9 @@ def _tok_digest(tok: str) -> int:
         import hashlib
 
         if len(_TOK_DIGEST_CACHE) >= _TOK_DIGEST_CACHE_MAX:
-            _TOK_DIGEST_CACHE.clear()
+            n_evict = len(_TOK_DIGEST_CACHE) - _TOK_DIGEST_CACHE_MAX // 2
+            for old in list(itertools.islice(_TOK_DIGEST_CACHE, n_evict)):
+                del _TOK_DIGEST_CACHE[old]
         d = int.from_bytes(hashlib.blake2b(tok.encode("utf-8"), digest_size=8).digest(), "big")
         _TOK_DIGEST_CACHE[tok] = d
     return d

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def _threshold_hex(rate_256: int) -> str:
     # 1..255 only: format(256, '02x') is the 3-char '100', and a 2-char
@@ -73,7 +75,7 @@ def stratified_hash_sample(
     ]
     # rates columns carry a private prefix: joining on a bare "stratum"
     # name and drop("stratum") would silently drop a same-named USER column
-    rates_df = spark.createDataFrame(rows, "__rates_stratum string, __rates_thr string")
+    rates_df = local_frame(spark, rows, "__rates_stratum string, __rates_thr string")
     default_thr = "00" if default_256 == 0 else _stratum_threshold_hex(default_256)
     prefix = F.substring(F.sha2(c.cast("string"), 256), 1, 2)
     joined = df.join(
@@ -261,7 +263,7 @@ def weighted_repeat(
         return whole, "zz" if frac_256 == 256 else format(frac_256, "02x") if frac_256 else "00"
 
     rows = [(s, *split(f)) for s, f in sorted(factors.items())]
-    fdf = spark.createDataFrame(rows, "__rep_stratum string, __rep_whole int, __rep_thr string")
+    fdf = local_frame(spark, rows, "__rep_stratum string, __rep_whole int, __rep_thr string")
     d_whole, d_thr = split(default)
     prefix = F.substring(F.sha2(F.concat(c.cast("string"), F.lit(":rep")), 256), 1, 2)
     joined = df.join(

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Defaults chosen for a local[N] single-JVM sandbox; on a real cluster these
 # are overridden by spark-submit conf (executor memory/cores, shuffle service,
@@ -50,6 +50,31 @@ def release_local_checkpoint(df) -> None:
         df._jdf.queryExecution().analyzed().rdd().unpersist(False)
     except Exception:
         pass
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """A small in-memory table (rows = tuples in schema order; schema a
+    StructType or DDL string) as a DataFrame that plans as a
+    ``LocalRelation``: the rows travel to the JVM once as an Arrow batch
+    and live in the plan itself. ``createDataFrame(list)`` instead plans
+    an ``ExistingRDD`` over pickled rows, so every query that scans it
+    (e.g. to broadcast a lookup table) runs a defaultParallelism-task job
+    through Python workers just to unpickle a handful of rows. Use it for
+    lookup tables and other tiny frames only — the rows are copied into
+    every plan that references them."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=field.type) for col, field in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def _submitted_conf():
@@ -156,6 +181,32 @@ def get_spark(
         # this is scale-safe, not a local-mode tune. Overridable via
         # spark-submit like every conf here.
         ("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072"),
+        # Spark's generated-class cache holds 100 entries by default, fewer
+        # than the ~160 sources one corpus_build_trim pass generates: the
+        # LRU evicted each class before its reuse, so every warm pass
+        # recompiled ~163 classes in Janino (measured: warm pass ~5.0 s ->
+        # ~4.2 s with this and the next conf, 4-core VM). A thousand small
+        # classes cost a few MB of metaspace. Static conf: it sizes a
+        # JVM-wide cache on first use, so it only takes effect when set
+        # before the first query of the JVM — here, at session build.
+        ("spark.sql.codegen.cache.maxEntries", "1000"),
+        # The cache key is the generated source, which by default names its
+        # class after the whole-stage codegen id. Under AQE that id depends
+        # on the order stages are re-planned in and varies between passes,
+        # so identical stage code came back under a new name (and a
+        # recompile) on 7-14 stages of every warm corpus_build_trim pass.
+        # Without the id the source is stable; only generated class names
+        # in stack traces lose it.
+        ("spark.sql.codegen.useIdInClassName", "false"),
+        # PySpark 4 captures the Python call site (a stack walk plus py4j
+        # round trips) on EVERY DataFrame/Column API call, only to decorate
+        # error messages: turning it off halves the py4j calls of a
+        # corpus_build_trim plan build (measured ~7,600 -> ~3,900). Error
+        # messages then lose their "== DataFrame ==" Python call-site
+        # fragment (the error class, message and JVM stack are unchanged);
+        # pass --conf spark.python.sql.dataFrameDebugging.enabled=true to
+        # get it back while debugging.
+        ("spark.python.sql.dataFrameDebugging.enabled", "false"),
         ("spark.driver.maxResultSize", "4g"),
         ("spark.sql.parquet.compression.codec", "zstd"),
         ("spark.serializer", "org.apache.spark.serializer.KryoSerializer"),

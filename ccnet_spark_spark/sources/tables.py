@@ -27,8 +27,22 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..schema import SIDECAR_SCHEMA
+from ..session import local_frame
+
+
+def _hashable(dt: T.DataType) -> bool:
+    """True when Spark's hash expressions accept the type: maps and
+    variants are rejected at analysis, also nested in arrays/structs."""
+    if isinstance(dt, (T.MapType, T.VariantType)):
+        return False
+    if isinstance(dt, T.ArrayType):
+        return _hashable(dt.elementType)
+    if isinstance(dt, T.StructType):
+        return all(_hashable(f.dataType) for f in dt)
+    return True
 
 
 def write_result(
@@ -50,6 +64,8 @@ def write_result(
     repartitionByRange is deliberately NOT used: with fewer range splits
     than hive groups the leading partition columns consume every boundary
     and the cluster column never gets sliced."""
+    if files_per_partition is not None and files_per_partition < 0:
+        raise ValueError(f"files_per_partition must be >= 0, got {files_per_partition}")
     if cluster_by:
         if partition_cols:
             df = df.repartition(*[F.col(c) for c in partition_cols])
@@ -65,10 +81,14 @@ def write_result(
         # on a large cluster; salt is xxhash64 of the row, never rand() —
         # retry-safe, SPARK-38388). files_per_partition=0 opts out
         # (upstream already distributed / a scattered baseline is wanted).
+        # The salt hashes only the columns xxhash64 accepts (no map or
+        # variant inside); fully duplicate rows share one salt, so a
+        # duplicate-heavy combo still lands on one writer.
         spark = df.sparkSession
         par = spark.sparkContext.defaultParallelism
         fpp = files_per_partition or max(1, par // 8)
-        salt = F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(fpp))
+        hashable = [F.col(f.name) for f in df.schema if _hashable(f.dataType)]
+        salt = F.pmod(F.xxhash64(*hashable), F.lit(fpp))
         df = df.repartition(par, *[F.col(c) for c in partition_cols], salt)
     (df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path))
 
@@ -242,8 +262,9 @@ def append_sidecar(spark: SparkSession, result_path: str, partition_id: str, res
     }
     import datetime
 
-    row["completed_at"] = datetime.datetime.now(datetime.timezone.utc).replace(tzinfo=None)
-    spark.createDataFrame([row], schema=SIDECAR_SCHEMA).write.mode("append").parquet(sidecar_path(result_path))
+    row["completed_at"] = datetime.datetime.now(datetime.timezone.utc)
+    sidecar = local_frame(spark, [tuple(row[f.name] for f in SIDECAR_SCHEMA)], SIDECAR_SCHEMA)
+    sidecar.write.mode("append").parquet(sidecar_path(result_path))
 
 
 def run_resumable(

@@ -7,6 +7,7 @@ divide-by-zero), threshold semantics, and plan shape (two Arrow
 crossings, narrow projections, no all-pairs join).
 """
 
+import hashlib
 import os
 import sys
 
@@ -74,3 +75,16 @@ def test_plan_two_arrow_crossings_no_cartesian(spark):
     # generator (x2 branches) + image tower + caption tower mapInPandas;
     # the cosine itself must add no Python stage
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+
+
+def test_token_digest_cache_evicts_oldest_half(monkeypatch):
+    from ccnet_spark_spark.operators import multimodal
+
+    monkeypatch.setattr(multimodal, "_TOK_DIGEST_CACHE", {})
+    monkeypatch.setattr(multimodal, "_TOK_DIGEST_CACHE_MAX", 4)
+    for tok in ["a", "b", "c", "d"]:
+        multimodal._tok_digest(tok)
+    multimodal._tok_digest("b")  # a hit never reorders: eviction is by insertion
+    d = multimodal._tok_digest("e")
+    assert list(multimodal._TOK_DIGEST_CACHE) == ["c", "d", "e"]
+    assert d == int.from_bytes(hashlib.blake2b(b"e", digest_size=8).digest(), "big")

@@ -1,8 +1,11 @@
 """Cutoff-table loaders: simple (lang,head,tail) CSV and the cc_net-style
 101-percentile matrix format."""
 
+import json
+
 import numpy as np
 import pandas as pd
+from pyspark.sql.types import StructType
 
 from ccnet_spark_spark.operators.bucket import (
     bucket_case_sql,
@@ -10,6 +13,7 @@ from ccnet_spark_spark.operators.bucket import (
     load_cutoffs,
     load_cutoffs_dict,
 )
+from ccnet_spark_spark.schema import CUTOFFS_SCHEMA
 
 
 def test_percentile_matrix_loader(tmp_path):
@@ -33,6 +37,14 @@ def test_simple_csv_roundtrip(spark):
     df = load_cutoffs(spark, cutoffs=d)
     rows = {r["lang"]: (r["pp_head"], r["pp_tail"]) for r in df.collect()}
     assert rows == {k: (float(a), float(b)) for k, (a, b) in d.items()}
+
+
+def test_empty_cutoffs_keep_schema(spark):
+    # the JVM-side schema, not PySpark's cached copy: non-null fields
+    # must stay non-null through the Arrow hand-over
+    df = load_cutoffs(spark, cutoffs={})
+    assert StructType.fromJson(json.loads(df._jdf.schema().json())) == CUTOFFS_SCHEMA
+    assert df.count() == 0
 
 
 def test_bucket_case_sql_arms():

@@ -6,7 +6,7 @@ and shuffle counts per operator."""
 import pyspark.sql.functions as F
 
 from ccnet_spark_spark.operators import bucket as bucket_op
-from ccnet_spark_spark.operators import dedup
+from ccnet_spark_spark.operators import bpe, dedup, sample
 from ccnet_spark_spark.operators.bucket import load_cutoffs_dict
 from ccnet_spark_spark.operators.lines import explode_lines, with_line_hash
 from ccnet_spark_spark.plans.pipeline import Config, Pipeline
@@ -49,6 +49,34 @@ def test_cutoffs_join_is_broadcast(spark):
     )
     out = bucket_op.with_bucket(df, bucket_op.load_cutoffs(spark, cutoffs=load_cutoffs_dict()))
     assert "BroadcastHashJoin" in _plan(out) or "BroadcastNestedLoopJoin" in _plan(out)
+
+
+def test_lookup_frames_are_local_relations(spark):
+    """Python-side lookup tables plan as a LocalTableScan (rows in the
+    plan): building them fires no job, and scanning them needs no Python
+    worker, unlike createDataFrame(list)'s ExistingRDD."""
+    sc = spark.sparkContext
+    docs = spark.range(40).select(
+        F.col("id").cast("string").alias("doc_id"),
+        F.when(F.col("id") % 2 == 0, "en").otherwise("fr").alias("lang"),
+        (F.col("id") * 10.0).alias("perplexity"),
+    )
+    sc.setJobGroup("lookup_build", "lookup_build")
+    try:
+        frames = [
+            bucket_op.with_bucket(docs, bucket_op.load_cutoffs(spark, cutoffs=load_cutoffs_dict())),
+            sample.stratified_hash_sample(docs, "doc_id", "lang", {"en": 128}),
+            sample.weighted_repeat(docs, "lang", {"en": 2.5}, id_col="doc_id"),
+        ]
+    finally:
+        sc._jsc.clearJobGroup()
+    assert list(sc.statusTracker().getJobIdsForGroup("lookup_build")) == []
+    merges, _vocab = bpe.train_bpe(spark, docs.select(F.lit("abab abc").alias("text")), num_merges=2)
+    for df in frames + [merges]:
+        plan = _plan(df)
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    for df in frames:
+        assert "BroadcastHashJoin" in _plan(df)
 
 
 def test_dedup_keep_is_single_shuffle(spark):

@@ -39,6 +39,29 @@ def test_distributed_write_row_identical_and_bounded_files(spark, tmp_path):
     assert len(dist_files) >= n_combos  # every combo still written
 
 
+def test_write_result_rejects_negative_files_per_partition(spark, tmp_path):
+    df = spark.range(4).select(F.col("id").cast("string").alias("lang"), F.lit("head").alias("bucket"))
+    with pytest.raises(ValueError, match="files_per_partition"):
+        write_result(df, str(tmp_path / "neg"), files_per_partition=-1)
+
+
+def test_write_result_salt_skips_unhashable_columns(spark, tmp_path):
+    # xxhash64 rejects maps (also nested) at analysis: the salt must hash
+    # only the other columns, and the rows must land unchanged
+    df = spark.range(40).select(
+        F.col("id"),
+        (F.col("id") % 2).cast("string").alias("lang"),
+        F.lit("head").alias("bucket"),
+        F.create_map(F.lit("k"), F.col("id")).alias("by_key"),
+        F.array(F.create_map(F.lit("k"), F.col("id"))).alias("maps"),
+    )
+    out = str(tmp_path / "maps")
+    write_result(df, out)
+    got = spark.read.parquet(out)
+    assert got.count() == 40
+    assert {r["id"]: r["by_key"]["k"] for r in got.collect()} == {i: i for i in range(40)}
+
+
 HEADERS = [
     b"P6 3 2 255\n",
     b"QJ 3 2 4\n",
