@@ -14,9 +14,6 @@ from pyspark.sql import functions as F
 # a public-regex approximation of GPT-2's tokenizer pre-split.
 TOKEN_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
-STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "that", "le", "la", "de", "el", "der", "die", "und"]
-
-
 def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
@@ -60,20 +57,6 @@ def punct_ratio_expr(col: Column | str) -> Column:
 def punct_ratio_sql(expr: str) -> str:
     p = _PUNCT_CLASS.replace("'", "''")
     return f"(length({expr}) - length(regexp_replace({expr}, '{p}', '', 'g'))) / greatest(length({expr}), 1)"
-
-
-def stopword_ratio_expr(col: Column | str) -> Column:
-    toks = F.split(F.lower(F.trim(_c(col))), "\\s+")
-    hits = F.size(F.filter(toks, lambda t: t.isin(STOPWORDS)))
-    return hits / F.greatest(F.size(toks), F.lit(1))
-
-
-def stopword_ratio_sql(expr: str) -> str:
-    lst = ", ".join(f"'{w}'" for w in STOPWORDS)
-    return (
-        f"len(list_filter(regexp_split_to_array(lower(trim({expr})), '\\s+'), t -> t in ({lst})))"
-        f" / greatest(len(regexp_split_to_array(lower(trim({expr})), '\\s+')), 1)"
-    )
 
 
 def repetition_ratio_expr(col: Column | str, n: int = 1) -> Column:

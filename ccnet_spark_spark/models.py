@@ -245,15 +245,16 @@ def stub_perplexity_one(tokenized: str) -> float:
 
 
 def stub_perplexity_batch(tokenized: pd.Series) -> pd.Series:
-    """Vectorized stub_perplexity_one over non-null single-line token
-    strings (the tokenizer's output never contains newlines — split()
-    consumed them). Every piece is <= 4 chars (head = marker + 3,
-    continuations <= 3), so len % 7 == len and
-    Σ logscore = -(n_pieces + Σ piece_chars / 2) — both derivable from the
-    STRING: n_pieces = spaces + 1 (0 for empty), piece_chars =
-    len - spaces. Sums of half-integers are exact in float64, so the
-    power/round land on bit-identical values to the per-piece loop
-    (fuzz-pinned in tests/test_stub_batch_equiv.py)."""
+    """Vectorized stub_perplexity_one over non-null token strings whose
+    pieces are joined by single spaces, with no other whitespace and no
+    piece longer than 6 chars — the tokenizer's output (split() consumed
+    the newlines; head = marker + 3, continuations <= 3). Then
+    len % 7 == len and Σ logscore = -(n_pieces + Σ piece_chars / 2) —
+    both derivable from the STRING: n_pieces = spaces + 1 (0 for empty),
+    piece_chars = len - spaces. Sums of half-integers are exact in
+    float64, so the power/round land on bit-identical values to the
+    per-piece loop (fuzz-pinned in tests/test_stub_batch_equiv.py). Other
+    strings get wrong values: stub_perplexity routes them to the spec."""
     ln = tokenized.str.len().to_numpy(dtype=np.float64)
     spaces = tokenized.str.count(" ").to_numpy(dtype=np.float64)
     n_pieces = np.where(ln > 0, spaces + 1.0, 0.0)
@@ -264,12 +265,24 @@ def stub_perplexity_batch(tokenized: pd.Series) -> pd.Series:
     return pd.Series(np.floor(pp * 10.0 + 0.5) / 10.0, index=tokenized.index, dtype="float64")
 
 
+# stub_perplexity_batch's precondition as a grammar: pieces of 1-6
+# non-whitespace chars joined by single spaces (Python re's \s is
+# str.isspace, the whitespace split() splits on). Possessive quantifiers
+# keep the match one linear pass: ~9 ms per 1k tokenized captions of
+# ~850 chars on a 4-core x86 VM, ~7% of the fused tokenize+perplexity call.
+_CLOSED_FORM = re.compile(r"(?:\S{1,6}+(?: \S{1,6}+)*+)?")
+
+
 def stub_perplexity(tokenized: pd.Series, langs: pd.Series) -> pd.Series:
     known = pd.Series(
         [(lang in VOCAB and tok is not None) for tok, lang in zip(tokenized, langs)],
         index=tokenized.index,
     )
-    pp = stub_perplexity_batch(tokenized.fillna(""))
+    tok = tokenized.fillna("")
+    pp = stub_perplexity_batch(tok)
+    off = np.fromiter((_CLOSED_FORM.fullmatch(t) is None for t in tok), dtype=bool, count=len(tok))
+    if off.any():
+        pp[off] = [stub_perplexity_one(t) for t in tok[off]]
     return pp.where(known, None).astype("float64")
 
 

@@ -53,14 +53,12 @@ def cutoffs_from_percentile_matrix(csv_path: str, percentile_head: int = 30, per
     return out
 
 
-def load_cutoffs(spark: SparkSession, csv_path: str | None = None, cutoffs: dict[str, tuple[float, float]] | None = None) -> DataFrame:
+def load_cutoffs(spark: SparkSession, cutoffs: dict[str, tuple[float, float]] | None = None) -> DataFrame:
+    """{lang: (pp_head, pp_tail)} as a local cutoff table; None reads
+    fixtures/cutoffs.csv."""
     if cutoffs is None:
-        rows = []
-        with open(csv_path or DEFAULT_CUTOFFS_CSV, newline="") as f:
-            for rec in csv.DictReader(f):
-                rows.append((rec["lang"], float(rec["pp_head"]), float(rec["pp_tail"])))
-    else:
-        rows = [(lang, float(h), float(t)) for lang, (h, t) in sorted(cutoffs.items())]
+        cutoffs = load_cutoffs_dict()
+    rows = [(lang, float(h), float(t)) for lang, (h, t) in sorted(cutoffs.items())]
     return local_frame(spark, rows, CUTOFFS_SCHEMA)
 
 

@@ -59,28 +59,22 @@ def dedup_keep(lines: DataFrame, id_col: str = "image_id", scope: str = "global"
     )
 
 
-def dedup_nokeep(lines: DataFrame, strategy: str = "window") -> DataFrame:
+def dedup_nokeep(lines: DataFrame) -> DataFrame:
     """Remove ALL copies of any line whose hash occurs more than once
     (reference H6 semantics).
 
-    strategy='window' (default): count(*) over (partition by hash_value) = 1
-    — ONE shuffle of the line set (the reference's groupBy+left_anti form
-    shuffles it twice). Measured at sf0.1/local[32], interleaved 4-rep A/B
-    on the bench's most expensive query: window min 1.01 s / median 1.26 s
-    vs join min 1.97 s / median 2.11 s — ~1.9x (VERDICT r2 #3).
-    strategy='join': the reference's two-shuffle form, kept for plan
-    comparison.
+    count(*) over (partition by hash_value) = 1 — ONE shuffle of the line
+    set (the reference's groupBy+left_anti form shuffles it twice).
+    Measured at sf0.1/local[32], interleaved 4-rep A/B on the bench's most
+    expensive query: window min 1.01 s / median 1.26 s vs join min 1.97 s
+    / median 2.11 s — ~1.9x (VERDICT r2 #3).
 
     NULL hash semantics (matters only if callers hash a nullable column —
     the engine's own line hashes are never null): a NULL hash is unknown
     content, not a duplicate of other unknowns, so NULL-hash rows always
-    survive. That is the join form's natural behavior (left_anti never
-    matches NULL keys); the window form makes it explicit — otherwise the
-    window would group all NULLs into one partition and drop them all,
-    silently diverging from the join form."""
-    if strategy == "join":
-        dups = lines.groupBy("hash_value").agg(F.count(F.lit(1)).alias("cnt")).where(F.col("cnt") > 1)
-        return lines.join(dups, on="hash_value", how="left_anti")
+    survive, as in the reference's left_anti join (which never matches
+    NULL keys) — without the explicit isNull arm the window would group
+    all NULLs into one partition and drop them all."""
     w = Window.partitionBy("hash_value")
     return (
         lines.withColumn("_cnt", F.count(F.lit(1)).over(w))
@@ -497,7 +491,6 @@ def decontaminate(
     text_col: str,
     eval_text_col: str | None = None,
     shingle_n: int = 8,
-    broadcast_eval: bool = True,
 ) -> DataFrame:
     """Benchmark decontamination — the standard training-data hygiene step
     (drop any training document sharing a word n-gram with an evaluation
@@ -506,11 +499,10 @@ def decontaminate(
     the practice, so this extends its filter family.
 
     Shape: the eval side collapses to a DISTINCT n-gram set — benchmarks
-    are tiny relative to a 10^12-row corpus, so it is BROADCAST
-    (broadcast_eval=False falls back to a shuffle join for oversized eval
-    suites); the corpus side explodes shingles (narrow (id, gram)
-    projection — the payload never explodes), inner-joins the gram set,
-    and the hit ids anti-join the full rows. The corpus is never compared
+    are tiny relative to a 10^12-row corpus, so it is BROADCAST; the
+    corpus side explodes shingles (narrow (id, gram) projection — the
+    payload never explodes), inner-joins the gram set, and the hit ids
+    anti-join the full rows. The corpus is never compared
     against itself — cost is O(corpus grams) + one anti-join."""
     etext = eval_text_col or text_col
 
@@ -528,9 +520,7 @@ def decontaminate(
             F.explode(hashing.word_shingles_expr(F.col("_toks"), n=shingle_n)).alias("_gram"),
         )
 
-    eval_grams = _grams(eval_df, [], etext).distinct()
-    if broadcast_eval:
-        eval_grams = F.broadcast(eval_grams)
+    eval_grams = F.broadcast(_grams(eval_df, [], etext).distinct())
     doc_grams = _grams(df, [id_col], text_col)
     hit_ids = doc_grams.join(eval_grams, "_gram").select(id_col).distinct()
     return df.join(hit_ids, id_col, "left_anti")
@@ -570,7 +560,6 @@ def hash64_decontaminate(
     prefix_bits: int = 16,
     max_hamming: int = 3,
     passes: int = 4,
-    broadcast_eval: bool = True,
 ) -> DataFrame:
     """IMAGE-side benchmark decontamination — the perceptual-hash analog of
     decontaminate(): drop every training row whose 64-bit fingerprint
@@ -580,9 +569,8 @@ def hash64_decontaminate(
     hygiene the text 8-gram pass cannot see.
 
     Shape (10^12-safe): the eval set is tiny relative to the corpus, so its
-    (hash, bucket) projection is BROADCAST (broadcast_eval=False falls back
-    to a shuffle join); the corpus is bucketed by the top prefix_bits of
-    the hash per rotated pass — same rotate-left trick as
+    (hash, bucket) projection is BROADCAST; the corpus is bucketed by the
+    top prefix_bits of the hash per rotated pass — same rotate-left trick as
     hash64_neardup_pairs, a cross-set bucket join instead of a self-join —
     and candidates verify by exact popcount(xor) <= max_hamming in pure JVM
     bit ops. Hit ids anti-join the full rows; the corpus is never compared
@@ -610,9 +598,7 @@ def hash64_decontaminate(
             )
             return F.shiftrightunsigned(rotated, 64 - prefix_bits)
 
-        eside = evals.select("_eh", _bucket(F.col("_eh")).alias("_bucket"))
-        if broadcast_eval:
-            eside = F.broadcast(eside)
+        eside = F.broadcast(evals.select("_eh", _bucket(F.col("_eh")).alias("_bucket")))
         hits.append(
             corpus.withColumn("_bucket", _bucket(F.col("_h")))
             .join(eside, "_bucket")
@@ -669,26 +655,25 @@ def build_bloom_words(hashes: DataFrame, hv_col: str, m_bits: int = 1 << 17, k: 
 BLOOM_LITERAL_MAX_WORDS = 4096
 
 
-def bloom_might_contain(
-    df: DataFrame, hv_col: str, words: list[int], k: int = 5, strategy: str = "auto"
-) -> DataFrame:
+def bloom_might_contain(df: DataFrame, hv_col: str, words: list[int], k: int = 5) -> DataFrame:
     """Adds boolean `_bloom_hit`: False = DEFINITELY absent from the set the
     words were built over; True = maybe present (fpp false positives).
     The k bit positions are always computed JVM-side (F.xxhash64 —
     bit-identical to the build); only the bit LOOKUP varies by bloom size:
 
-    - 'literal' (small blooms, the contract/dev scale): the bit array
-      rides the plan as ONE hex-string literal (words packed
-      little-endian, so bit `pos` lives at byte pos/8, bit pos%8; each
-      probe is substring + conv + shift + mask, all inside codegen, zero
-      Python). Measured probe cost is O(m) per row — UTF8String.substring
+    - literal (a word list of at most BLOOM_LITERAL_MAX_WORDS — the
+      contract/dev scale): the bit array rides the plan as ONE hex-string
+      literal (words packed little-endian, so bit `pos` lives at byte
+      pos/8, bit pos%8; each probe is substring + conv + shift + mask, all
+      inside codegen, zero Python). Measured probe cost is O(m) per row — UTF8String.substring
       scans from the string start — so this path is capped at
       BLOOM_LITERAL_MAX_WORDS (32 KiB of plan text). A 2048-element
       array<long> literal instead costs ~1.3 s of plan overhead PER QUERY
       (a 2048-node expression tree) and a from_json-folded array literal
       evaluates even slower (measured 6-7 s / 100k rows) — the string
       literal is the fastest plan-embedded form.
-    - 'broadcast' (large blooms): the words ship ONCE per executor as a
+    - broadcast (a larger word list, or a SparkContext.broadcast handle
+      of an int64 numpy array): the words ship ONCE per executor as a
       broadcast numpy int64 array and the lookup is a vectorized Arrow
       UDF doing pure numpy gathers — measured ~0.3 s / 100k rows for a
       2^25-bit bloom where the string literal takes minutes (the O(m)
@@ -700,20 +685,13 @@ def bloom_might_contain(
     prebroadcast = hasattr(words, "value")  # a SparkContext.broadcast handle
     n_words = len(words.value) if prebroadcast else len(words)
     m_bits = n_words * 64
-    if strategy == "auto":
-        strategy = (
-            "broadcast"
-            if prebroadcast or n_words > BLOOM_LITERAL_MAX_WORDS
-            else "literal"
-        )
     pos_cols = [
         F.pmod(F.xxhash64(F.lit(i), F.col(hv_col)), F.lit(m_bits)) for i in range(k)
     ]
-    if strategy == "literal":
+    if not prebroadcast and n_words <= BLOOM_LITERAL_MAX_WORDS:
         import struct
 
-        wl = list(words.value) if prebroadcast else words
-        blob = b"".join(struct.pack("<q", int(w)) for w in wl).hex()
+        blob = b"".join(struct.pack("<q", int(w)) for w in words).hex()
         out = df.withColumn("_blob", F.lit(blob))
         conds = []
         for i, pc in enumerate(pos_cols):

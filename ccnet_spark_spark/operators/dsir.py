@@ -98,16 +98,14 @@ def score_dsir(
     model: dict,
     text_col: str = "text",
     id_col: str = "doc_id",
-    broadcast_model: bool = True,
 ) -> DataFrame:
     """(id_col, n_grams, log_w) — importance log-weight per document.
     One broadcast equi-join on bucket + one groupBy; the sum runs over
     DECIMAL(20,6) so it is partition-order independent."""
-    hint = F.broadcast if broadcast_model else (lambda d: d)
     ev = df.where(F.col(text_col).isNotNull()).select(
         id_col, F.explode(bucket_events_expr(F.col(text_col))).alias("bucket")
     )
-    scored = ev.join(hint(model["model"].select("bucket", "delta_logp")), "bucket", "left")
+    scored = ev.join(F.broadcast(model["model"].select("bucket", "delta_logp")), "bucket", "left")
     lp = F.coalesce(F.col("delta_logp"), F.lit(model["unseen_delta"])).cast("decimal(20,6)")
     return scored.groupBy(id_col).agg(
         F.count(F.lit(1)).alias("n_grams"),

@@ -1,9 +1,8 @@
 """Length + heuristic drop rules.
 
-- real_len: reference P1 (/root/reference/pipe_line.py:180-181) — recompute
-  length from the text itself.
-- min_len filter: reference S4 (/root/reference/pipe_load.py:164-170,
-  default 300 at pipe_line.py:76).
+- min_len: reference S4 (pipe_load.py:164-170, default 300
+  at pipe_line.py:76); the pipeline labels short rows `too_short` instead
+  of filtering them.
 - digit/char-ratio heuristics: cc_net-style quality drops (north_rule).
 All pure built-in expressions — pushed down / codegen'd by Catalyst.
 """
@@ -17,14 +16,6 @@ from ..functions.textstats import digit_ratio_expr
 
 DEFAULT_MIN_LEN = 300
 DEFAULT_MAX_DIGIT_RATIO = 0.30
-
-
-def with_real_len(df: DataFrame, text_col: str = "caption", out_col: str = "length") -> DataFrame:
-    return df.withColumn(out_col, F.length(F.col(text_col)).cast("int"))
-
-
-def min_len_filter(df: DataFrame, text_col: str = "caption", min_len: int = DEFAULT_MIN_LEN) -> DataFrame:
-    return df.filter(F.length(F.col(text_col)) >= min_len)
 
 
 def with_heuristic_flags(df: DataFrame, text_col: str = "caption", min_len: int = DEFAULT_MIN_LEN, max_digit_ratio: float = DEFAULT_MAX_DIGIT_RATIO) -> DataFrame:

@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..models import LID_THRESHOLD, predict_lang
+from ..models import predict_lang
 
 LID_RESULT_TYPE = T.StructType(
     [
@@ -21,18 +21,18 @@ LID_RESULT_TYPE = T.StructType(
 )
 
 
-def make_lid_udf(model_path: str | None = None, threshold: float = LID_THRESHOLD):
+def make_lid_udf(model_path: str | None = None):
     @F.pandas_udf(LID_RESULT_TYPE)
     def lid_udf(texts: pd.Series) -> pd.DataFrame:
-        out = predict_lang(texts, model_path=model_path, threshold=threshold)
+        out = predict_lang(texts, model_path=model_path)
         out["score"] = out["score"].astype("float32")
         return out
 
     return lid_udf
 
 
-def with_lang(df: DataFrame, text_col: str = "caption", model_path: str | None = None, threshold: float = LID_THRESHOLD) -> DataFrame:
-    lid = make_lid_udf(model_path, threshold)
+def with_lang(df: DataFrame, text_col: str = "caption", model_path: str | None = None) -> DataFrame:
+    lid = make_lid_udf(model_path)
     return (
         df.withColumn("_lid", lid(F.col(text_col)))
         .withColumn("lang", F.col("_lid.lang"))

@@ -17,10 +17,10 @@ DECIMAL(20,6) — exact integer-scaled arithmetic, associative, immune to
 partition-order float drift — before the single closing pow/round.
 
 Scale: the trained model is observed-bigrams-sized (KenLM-style, MBs to
-low GBs per language) — broadcast it for the score join when it fits
-(the common case; pass broadcast_model=False to fall back to a plain
-shuffle equi-join on (lang, w1, w2), which is the same partitioning the
-context join reuses). Training is one explode + one groupBy over the
+low GBs per language) and the score joins broadcast it. A model too big
+to broadcast needs a shuffle equi-join on (lang, w1, w2) instead — the
+same partitioning the context join reuses — which this module does not
+offer. Training is one explode + one groupBy over the
 reference slice (map-side combinable); contexts and vocab sizes are
 derived from the bigram-count frame, never from a second corpus pass.
 """
@@ -110,7 +110,6 @@ def score_bigram_pp(
     lang_col: str = "lang",
     id_col: str = "doc_id",
     k: int = 1,
-    broadcast_model: bool = True,
 ) -> DataFrame:
     """Score each row's text with the trained LM: (id_col, lang, n_grams,
     lm_pp) where n_grams = len(words) + 1 (the reference's own length
@@ -122,15 +121,14 @@ def score_bigram_pp(
     absent from the model yields lm_pp = NULL (no silent cross-language
     scoring). The Σ runs over DECIMAL(20,6) so the result is independent
     of partitioning / engine summation order."""
-    hint = F.broadcast if broadcast_model else (lambda d: d)
     events = _bigram_events(df, text_col, lang_col, [id_col])
     unseen = F.round(
         F.log10(F.lit(float(k)) / (F.coalesce(F.col("c1"), F.lit(0)) + F.lit(k) * F.col("v"))), 6
     )
     scored = (
-        events.join(hint(model["bigrams"].select("lang", "w1", "w2", "logp")), ["lang", "w1", "w2"], "left")
-        .join(hint(model["contexts"]), ["lang", "w1"], "left")
-        .join(hint(model["vocab"]), ["lang"], "left")
+        events.join(F.broadcast(model["bigrams"].select("lang", "w1", "w2", "logp")), ["lang", "w1", "w2"], "left")
+        .join(F.broadcast(model["contexts"]), ["lang", "w1"], "left")
+        .join(F.broadcast(model["vocab"]), ["lang"], "left")
         .withColumn("_lp", F.coalesce(F.col("logp"), unseen).cast("decimal(20,6)"))
     )
     return scored.groupBy(id_col, "lang").agg(

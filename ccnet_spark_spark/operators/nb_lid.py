@@ -111,14 +111,12 @@ def predict_nb_lid(
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 3,
-    broadcast_model: bool = True,
 ) -> DataFrame:
     """(id_col, pred_lang, nb_score) — argmax over the trained languages.
     `lang_values` is the explicit candidate list (the model's languages);
     passing it as literals keeps the candidate axis an explode, not a
     join. Documents with no grams (text shorter than n) score on priors
     plus zero likelihood — still a deterministic argmax."""
-    hint = F.broadcast if broadcast_model else (lambda d: d)
     events = _gram_events(df, text_col, [id_col], n)
     n_doc = events.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_doc"))
     # every non-null-text doc appears even with zero grams: start from the
@@ -134,7 +132,7 @@ def predict_nb_lid(
     )
     seen = (
         events.select(id_col, "gram")
-        .join(hint(model["grams"].select("lang", "gram", "logp")), "gram")
+        .join(F.broadcast(model["grams"].select("lang", "gram", "logp")), "gram")
         .groupBy(id_col, "lang")
         .agg(
             F.sum(F.col("logp").cast("decimal(20,6)")).alias("seen_sum"),
@@ -143,7 +141,7 @@ def predict_nb_lid(
     )
     scored = (
         cand.join(seen, [id_col, "lang"], "left")
-        .join(hint(model["langs"].select("lang", "unseen_logp", "prior_logp")), "lang")
+        .join(F.broadcast(model["langs"].select("lang", "unseen_logp", "prior_logp")), "lang")
         .select(
             id_col,
             "lang",

@@ -16,16 +16,14 @@ DROP_TOO_SHORT = "too_short"
 DROP_DUP_LINES = "dup_lines_all"  # every line removed by dedup
 DROP_LID_NULL = "lid_null"  # LID below threshold
 DROP_LANG_FILTER = "lang_filtered"  # lang not in selected set
-DROP_DIGIT_HEAVY = "digit_heavy"
 
 
-def with_verdict(df: DataFrame, selected_langs: list[str] | None = None, use_digit_rule: bool = False) -> DataFrame:
-    reason = F.when(F.col("too_short"), F.lit(DROP_TOO_SHORT)).when(
-        F.col("dedup_caption").isNull() | (F.length("dedup_caption") == 0), F.lit(DROP_DUP_LINES)
+def with_verdict(df: DataFrame, selected_langs: list[str] | None = None) -> DataFrame:
+    reason = (
+        F.when(F.col("too_short"), F.lit(DROP_TOO_SHORT))
+        .when(F.col("dedup_caption").isNull() | (F.length("dedup_caption") == 0), F.lit(DROP_DUP_LINES))
+        .when(F.col("lang").isNull(), F.lit(DROP_LID_NULL))
     )
-    if use_digit_rule:
-        reason = reason.when(F.col("digit_heavy"), F.lit(DROP_DIGIT_HEAVY))
-    reason = reason.when(F.col("lang").isNull(), F.lit(DROP_LID_NULL))
     if selected_langs:
         reason = reason.when(~F.col("lang").isin(selected_langs), F.lit(DROP_LANG_FILTER))
     reason = reason.otherwise(F.lit(None).cast("string"))

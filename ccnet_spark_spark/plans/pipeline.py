@@ -56,8 +56,9 @@ class Config:
     dedup_variant: str = "keep"  # "keep" | "nokeep" (reference H5/H6)
     dedup_scope: str = "global"  # "global" (reference) | "document"
     hash_algo: str = "sha2"  # "sha2" (oracle-reproducible) | "xxhash64" (fast path)
+    # fastText LID weights; None (or missing) -> stub LID. Both refuse
+    # below models.LID_THRESHOLD, the reference's 0.5.
     lid_model_path: str | None = None
-    lid_threshold: float = 0.5
     # when 'lid' is NOT in steps, take language labels from this input
     # column instead (pre-labeled corpora / externally-run LID) — the
     # tokenize/LM/bucket stages need a lang either way
@@ -78,13 +79,9 @@ class Config:
     # NULL lang -> bucket 'all' as before.
     lid_artifact: str | None = None
     selected_langs: list[str] | None = None
+    # None -> fixtures/cutoffs.csv (bucket.load_cutoffs_dict reads any other file)
     cutoffs: dict[str, tuple[float, float]] | None = None
-    cutoffs_csv: str | None = None
-    salt_partitions: int | None = None  # None -> spark default parallelism
-    sample_rate: float | None = None  # reference isSample/sampleRate knob
-    fuse_lm: bool = True  # tokenize+perplexity in one Arrow crossing
     observe: bool = False  # attach an Observation with run metrics (rows/kept/chars)
-    drop_tokenized: bool = True  # reference DROP step (pipe_line.py:342-343)
     # engine addition (off by default — not a reference step): after line
     # dedup, cut corpus-duplicated token passages out of dedup_caption
     # (operators/passages.py). Trimmed text is a space-joined token stream
@@ -93,11 +90,11 @@ class Config:
     passage_trim: bool = False
     passage_gram_n: int = 8
     # engine addition (off by default): LAION/DataComp image+caption
-    # metadata gates (operators/image_quality.py) as the FIRST filter —
-    # a pure scan predicate (no join, no Python) that cuts every
-    # downstream stage. Requires the pair columns (w, h, fmt, bytes).
+    # metadata gates (operators/image_quality.py, ImageGateConfig
+    # defaults) as the FIRST filter — a pure scan predicate (no join, no
+    # Python) that cuts every downstream stage. Requires the pair columns
+    # (w, h, fmt, bytes).
     image_gates: bool = False
-    image_gate_config: object | None = None  # ImageGateConfig; None -> defaults
     # engine addition (off by default): image-side PII scrub FIRST — strip
     # payload header comments (the PPM carrier for EXIF-ish creator/GPS
     # tags) before any retention decision, so everything downstream —
@@ -130,6 +127,8 @@ class Config:
     # (multimodal.model_gate_passthrough; pinned equal by pytest)
     model_gates_mode: str = "join"
     align_tau: float = 0.1
+    # subset of ALL_STEPS; without "drop" the intermediate `tokenized`
+    # column stays in the output
     steps: list[str] = field(default_factory=lambda: list(ALL_STEPS))
 
 
@@ -166,9 +165,9 @@ class Pipeline:
         if cfg.image_gates:
             from ..operators.image_quality import ImageGateConfig, keep_expr
 
-            # single predicate on the source scan — applied BEFORE
-            # sampling so the sampled population is the gated corpus
-            df = df.filter(keep_expr(cfg.image_gate_config or ImageGateConfig(), text_col))
+            # single predicate on the source scan, ahead of every
+            # downstream stage
+            df = df.filter(keep_expr(ImageGateConfig(), text_col))
         if cfg.caption_budget is not None:
             from ..functions.normalize import normalize_for_dedup_expr
 
@@ -245,8 +244,6 @@ class Pipeline:
                     .select(id_col)
                 )
                 df = df.join(heads_keep, id_col, "left_semi").join(align_keep, id_col, "left_semi")
-        if cfg.sample_rate:
-            df = df.sample(fraction=cfg.sample_rate, seed=42)
 
         # real_len + original_* (reference P1 + regroup renames H7)
         base = (
@@ -300,9 +297,7 @@ class Pipeline:
                     pred.select(id_col, F.col("pred_lang").alias("lang")), on=id_col, how="left"
                 ).withColumn("score", F.lit(None).cast("float"))
             else:
-                enriched = lid.with_lang(enriched, "dedup_caption", cfg.lid_model_path, cfg.lid_threshold)
-            n_parts = cfg.salt_partitions or self.spark.sparkContext.defaultParallelism
-            enriched = lid.salted_repartition(enriched, n_parts, "lang", id_col=id_col)
+                enriched = lid.with_lang(enriched, "dedup_caption", cfg.lid_model_path)
         elif cfg.lang_col:
             # pre-labeled corpus: join the input's language column in place
             # of LID output (same skew treatment as the LID path)
@@ -310,9 +305,10 @@ class Pipeline:
             enriched = enriched.join(
                 df.select(id_col, F.col(src).alias("lang")), on=id_col, how="left"
             )
-            n_parts = cfg.salt_partitions or self.spark.sparkContext.defaultParallelism
+        if "lid" in cfg.steps or cfg.lang_col:
+            n_parts = self.spark.sparkContext.defaultParallelism
             enriched = lid.salted_repartition(enriched, n_parts, "lang", id_col=id_col)
-        if "sp" in cfg.steps and "lm" in cfg.steps and cfg.fuse_lm and not cfg.lm_artifact:
+        if "sp" in cfg.steps and "lm" in cfg.steps and not cfg.lm_artifact:
             # one Arrow crossing for tokenize+perplexity (see perplexity.py)
             enriched = perplexity.with_tokenized_and_perplexity(enriched, "dedup_caption", cfg.lm_dir)
         else:
@@ -341,14 +337,15 @@ class Pipeline:
                 )
             elif "lm" in cfg.steps:
                 enriched = perplexity.with_perplexity(enriched, "tokenized", cfg.lm_dir)
-        if cfg.drop_tokenized and "sp" in cfg.steps:
+        if "drop" in cfg.steps and "sp" in cfg.steps:
+            # reference DROP step (pipe_line.py:342-343)
             enriched = enriched.drop("tokenized")
 
         # --- join the narrow results back to the wide payload rows ---
         out = base.join(enriched, on=id_col, how="left")
 
         if "pp_bucket" in cfg.steps:
-            cutoffs_df = bucket_op.load_cutoffs(self.spark, cfg.cutoffs_csv, cfg.cutoffs)
+            cutoffs_df = bucket_op.load_cutoffs(self.spark, cfg.cutoffs)
             out = bucket_op.with_bucket(out, cutoffs_df)
         if "scrub" in cfg.steps:
             out = out.withColumn("scrubbed_caption", scrub_expr(F.coalesce(F.col("dedup_caption"), F.col(text_col))))

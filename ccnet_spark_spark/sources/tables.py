@@ -50,7 +50,6 @@ def write_result(
     path: str,
     partition_cols: tuple[str, ...] = ("lang", "bucket"),
     cluster_by: tuple[str, ...] = (),
-    files_per_partition: int | None = None,
 ) -> None:
     """Hive-partitioned parquet sink. cluster_by additionally co-locates
     each hive partition's rows (hash repartition on the partition keys) and
@@ -64,29 +63,25 @@ def write_result(
     repartitionByRange is deliberately NOT used: with fewer range splits
     than hive groups the leading partition columns consume every boundary
     and the cluster column never gets sliced."""
-    if files_per_partition is not None and files_per_partition < 0:
-        raise ValueError(f"files_per_partition must be >= 0, got {files_per_partition}")
     if cluster_by:
         if partition_cols:
             df = df.repartition(*[F.col(c) for c in partition_cols])
         df = df.sortWithinPartitions(*[F.col(c) for c in partition_cols + cluster_by])
-    elif partition_cols and files_per_partition != 0:
+    elif partition_cols:
         # hash-distribute rows to the writers (what Iceberg's
         # write.distribution-mode=hash does; guide §6 "coalesce on write"):
         # without it every task writes one file per hive combo it happens
         # to hold — measured 512 files and 4-9 s for the bench sink vs 16
         # files and 1-4 s distributed. A deterministic salt bounds skew:
-        # each hive combo spreads over at most files_per_partition writer
-        # groups (default parallelism/8, so a hot language still fans out
-        # on a large cluster; salt is xxhash64 of the row, never rand() —
-        # retry-safe, SPARK-38388). files_per_partition=0 opts out
-        # (upstream already distributed / a scattered baseline is wanted).
+        # each hive combo spreads over at most parallelism/8 writer groups
+        # (so a hot language still fans out on a large cluster; salt is
+        # xxhash64 of the row, never rand() — retry-safe, SPARK-38388).
         # The salt hashes only the columns xxhash64 accepts (no map or
         # variant inside); fully duplicate rows share one salt, so a
         # duplicate-heavy combo still lands on one writer.
         spark = df.sparkSession
         par = spark.sparkContext.defaultParallelism
-        fpp = files_per_partition or max(1, par // 8)
+        fpp = max(1, par // 8)
         hashable = [F.col(f.name) for f in df.schema if _hashable(f.dataType)]
         salt = F.pmod(F.xxhash64(*hashable), F.lit(fpp))
         df = df.repartition(par, *[F.col(c) for c in partition_cols], salt)

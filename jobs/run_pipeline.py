@@ -75,7 +75,6 @@ def main(argv: list[str] | None = None, stop_session: bool = True) -> int:
         lid_artifact=args.lid_artifact,
         selected_langs=args.langs.split(",") if args.langs else None,
         cutoffs=load_cutoffs_dict(args.cutoffs) if args.cutoffs else None,
-        cutoffs_csv=args.cutoffs,
         lang_col=args.lang_col,
         passage_trim=args.trim_passages,
         passage_gram_n=args.passage_gram_n,

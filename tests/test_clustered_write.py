@@ -58,11 +58,11 @@ def test_clustered_write_roundtrip_smaller_prunable(spark, small_row_groups, tmp
         (F.pmod(F.xxhash64("id", F.lit(2)), 10_000) / 10.0).alias("perplexity"),
     ).cache()
     plain, clustered = str(tmp_path / "plain"), str(tmp_path / "clustered")
-    # files_per_partition=0: the size/row-group comparison below is
-    # against the SCATTERED baseline (one file per task x hive combo) the
-    # cluster_by claim was always about; the r6 default hash-distributes
+    # plain partitionBy: the size/row-group comparison below is against
+    # the SCATTERED baseline (one file per task x hive combo) the
+    # cluster_by claim was always about; write_result hash-distributes
     # plain writes too, which can compress better than the sorted form
-    write_result(df, plain, files_per_partition=0)
+    df.write.mode("overwrite").partitionBy("lang", "bucket").parquet(plain)
     write_result(df, clustered, cluster_by=("perplexity",))
     df.unpersist()
 

@@ -25,6 +25,21 @@ TRICKY = [
 ]
 
 
+def test_dedup_nokeep_drops_every_copy_keeps_null_hashes(spark):
+    rows = [
+        ("a", 0, "x", "h1"),
+        ("b", 0, "x", "h1"),  # dup of a's line
+        ("a", 1, "y", "h2"),
+        ("c", 0, "z", "h3"),
+        ("c", 1, "z2", "h3"),  # dup within doc
+        ("d", 0, "n1", None),  # NULL hashes: unknown content, NOT dups of
+        ("e", 0, "n2", None),  # each other — both must survive
+    ]
+    lines = spark.createDataFrame(rows, ["doc_id", "line_id", "line", "hash_value"])
+    got = sorted((r["doc_id"], r["line_id"]) for r in dedup.dedup_nokeep(lines).collect())
+    assert got == [("a", 1), ("d", 0), ("e", 0)]
+
+
 def test_normalize_expr_matches_python(spark):
     df = spark.createDataFrame([(i, t) for i, t in enumerate(TRICKY)], ["i", "t"])
     got = {r["i"]: r["n"] for r in df.select("i", normalize_for_dedup_expr(F.col("t")).alias("n")).collect()}

@@ -103,9 +103,6 @@ def test_dedup_nokeep_plan_shapes(spark):
     plan = _plan(dedup.dedup_nokeep(lines))
     assert "Window" in plan and "Join" not in plan
     assert plan.count("Exchange") == 1
-    # reference-shaped two-shuffle form retained behind the flag
-    plan_join = _plan(dedup.dedup_nokeep(lines, strategy="join"))
-    assert "LeftAnti" in plan_join
 
 
 def test_pipeline_has_no_cartesian_and_uses_codegen(spark, tmp_path):

@@ -24,7 +24,7 @@ def test_distributed_write_row_identical_and_bounded_files(spark, tmp_path):
     )
     dist, scat = str(tmp_path / "dist"), str(tmp_path / "scat")
     write_result(df, dist)
-    write_result(df, scat, files_per_partition=0)
+    df.write.mode("overwrite").partitionBy("lang", "bucket").parquet(scat)
     a = spark.read.parquet(dist)
     b = spark.read.parquet(scat)
     assert a.count() == b.count() == n
@@ -33,16 +33,10 @@ def test_distributed_write_row_identical_and_bounded_files(spark, tmp_path):
     par = spark.sparkContext.defaultParallelism
     fpp = max(1, par // 8)
     dist_files = glob.glob(f"{dist}/*/*/*.parquet")
-    # each hive combo is spread over at most files_per_partition salt
-    # groups, and groups landing in one task merge into one file
+    # each hive combo is spread over at most parallelism/8 salt groups,
+    # and groups landing in one task merge into one file
     assert len(dist_files) <= n_combos * fpp
     assert len(dist_files) >= n_combos  # every combo still written
-
-
-def test_write_result_rejects_negative_files_per_partition(spark, tmp_path):
-    df = spark.range(4).select(F.col("id").cast("string").alias("lang"), F.lit("head").alias("bucket"))
-    with pytest.raises(ValueError, match="files_per_partition"):
-        write_result(df, str(tmp_path / "neg"), files_per_partition=-1)
 
 
 def test_write_result_salt_skips_unhashable_columns(spark, tmp_path):

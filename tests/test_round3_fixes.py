@@ -4,9 +4,7 @@
    never band-match each other — previously they all shared the identical
    sentinel signature, creating O(k^2) candidate pairs within one skewed
    band group and silently dropping every shingle-less doc but one.
-2. dedup_nokeep single-shuffle window form must equal the reference's
-   two-shuffle groupBy+left_anti form exactly.
-3. simhash_neardup_pairs: exact duplicates are found at hamming 0; docs in
+2. simhash_neardup_pairs: exact duplicates are found at hamming 0; docs in
    different prefix buckets are never paired.
 """
 
@@ -47,23 +45,6 @@ def test_lsh_dedup_keeps_all_shingleless_docs(spark, mixed_docs):
     }
     # only the true near-dup (d4, larger id of the d3/d4 pair) is dropped
     assert survivors == {"d0", "d1", "d2", "d3", "d5"}
-
-
-def test_dedup_nokeep_window_equals_join(spark):
-    rows = [
-        ("a", 0, "x", "h1"),
-        ("b", 0, "x", "h1"),  # dup of a's line
-        ("a", 1, "y", "h2"),
-        ("c", 0, "z", "h3"),
-        ("c", 1, "z2", "h3"),  # dup within doc
-        ("d", 0, "n1", None),  # NULL hashes: unknown content, NOT dups of
-        ("e", 0, "n2", None),  # each other — both forms must keep them
-    ]
-    lines = spark.createDataFrame(rows, ["doc_id", "line_id", "line", "hash_value"])
-    key = lambda r: (r["doc_id"], r["line_id"])  # noqa: E731
-    w = sorted(map(key, dedup.dedup_nokeep(lines, strategy="window").collect()))
-    j = sorted(map(key, dedup.dedup_nokeep(lines, strategy="join").collect()))
-    assert w == j == [("a", 1), ("d", 0), ("e", 0)]
 
 
 def test_simhash_neardup_exact_dup_at_zero(spark):
@@ -114,7 +95,7 @@ def test_pipeline_on_empty_input(spark):
     assert out.count() == 0
     for col in ENGINE_COLUMNS:
         if col == "tokenized":
-            continue  # dropped by default (Config.drop_tokenized, reference DROP step)
+            continue  # dropped by the default "drop" step (reference DROP step)
         assert col in out.columns, col
 
 

@@ -146,9 +146,11 @@ def test_bpe_trainer_releases_round_checkpoints(spark):
 
 
 def test_bloom_probe_strategies_agree(spark):
-    """The broadcast/numpy probe (large-bloom scale path) must return
-    bit-identical verdicts to the hex-string-literal probe (small-bloom
-    codegen path), including zero false negatives for every built key."""
+    """The broadcast/numpy probe (large-bloom scale path, forced here by
+    passing a broadcast handle) must return bit-identical verdicts to the
+    hex-string-literal probe (small-bloom codegen path), including zero
+    false negatives for every built key."""
+    import numpy as np
     from pyspark.sql import functions as F
 
     from ccnet_spark_spark.operators import dedup
@@ -158,11 +160,12 @@ def test_bloom_probe_strategies_agree(spark):
     probe_df = spark.range(4000).select(F.concat(F.lit("k"), F.col("id")).alias("hv"))
     lit_hits = {
         r["hv"]: r["_bloom_hit"]
-        for r in dedup.bloom_might_contain(probe_df, "hv", words, strategy="literal").collect()
+        for r in dedup.bloom_might_contain(probe_df, "hv", words).collect()
     }
+    handle = spark.sparkContext.broadcast(np.array(words, dtype=np.int64))
     bc_hits = {
         r["hv"]: r["_bloom_hit"]
-        for r in dedup.bloom_might_contain(probe_df, "hv", words, strategy="broadcast").collect()
+        for r in dedup.bloom_might_contain(probe_df, "hv", handle).collect()
     }
     assert lit_hits == bc_hits
     # no false negatives: every built key must hit

@@ -2,11 +2,18 @@
 (/root/reference/test_module/test_pipeline.py:9-78): every prefix of the
 step list must run and keep row count + schema stability."""
 
+import ast
+import dataclasses
+import subprocess
+from pathlib import Path
+
 import pytest
 
 from ccnet_spark_spark.operators.bucket import load_cutoffs_dict
 from ccnet_spark_spark.plans.pipeline import ALL_STEPS, Config, Pipeline
 from ccnet_spark_spark.synth import generate_pairs
+
+REPO = Path(__file__).resolve().parent.parent
 
 PREFIXES = [ALL_STEPS[:i] for i in range(2, len(ALL_STEPS) + 1)]
 
@@ -23,6 +30,28 @@ def test_step_prefix_runs(spark, steps):
         assert "scrubbed_caption" in out.columns
     if "verdict" in steps:
         assert "keep" in out.columns
+    # the reference DROP step removes the intermediate token column
+    assert ("tokenized" in out.columns) == ("sp" in steps and "drop" not in steps)
+
+
+def test_every_config_field_has_a_caller():
+    """A Config switch that no job, query, tool or test sets guards a
+    branch that only ever runs at its default: delete it instead."""
+    try:
+        ls = subprocess.run(["git", "ls-files", "*.py"], cwd=REPO, capture_output=True, text=True, check=True)
+        sources = [REPO / n for n in ls.stdout.split()]
+    except (OSError, subprocess.CalledProcessError):  # not a git checkout
+        sources = [p for p in REPO.rglob("*.py") if ".git" not in p.parts]
+    passed = set()
+    for path in sources:
+        if path == REPO / "ccnet_spark_spark" / "plans" / "pipeline.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            fn = getattr(node, "func", None)
+            if (fn.id if isinstance(fn, ast.Name) else getattr(fn, "attr", None)) == "Config":
+                passed |= {kw.arg for kw in node.keywords if kw.arg}
+    unset = [f.name for f in dataclasses.fields(Config) if f.name not in passed]
+    assert not unset, f"Config fields no caller passes: {unset}"
 
 
 def test_fuzz_normalize_scrub_cross_engine(spark):

@@ -65,6 +65,26 @@ def test_stub_perplexity_batch_matches_per_row_spec():
         assert models.stub_perplexity_one(t) == got, repr(t)
 
 
+def test_stub_perplexity_matches_spec_outside_closed_form():
+    """with_perplexity accepts any token string, not just tokenizer
+    output: newlines and other whitespace, doubled/leading/trailing
+    spaces and 7+-char pieces must still score like the per-row spec."""
+    rng = random.Random(29)
+    pieces = ["▁ab", "cd", "▁e", "abcdefgh", "▁abcdef", "abcdefghijklmno", "中文字", "x"]
+    seps = [" ", " ", " ", "  ", "\n", "\t", "\xa0", "\r\n", " \n "]
+    toks = []
+    for _ in range(3000):
+        k = rng.randint(0, 8)
+        t = "".join(rng.choice(pieces) + rng.choice(seps) for _ in range(k))
+        toks.append(rng.choice(["", " ", "\n"]) + t.rstrip() + rng.choice(["", " ", "\n"]))
+    toks += ["abcdefgh", "▁ab cd\n▁ef", " ", "  ", "\n", "a  b", " a", "a ", "abcdef abcdefg"]
+    out = models.stub_perplexity(
+        pd.Series(toks, dtype="object"), pd.Series(["en"] * len(toks), dtype="object")
+    )
+    for t, got in zip(toks, out):
+        assert models.stub_perplexity_one(t) == got, repr(t)
+
+
 def test_stub_perplexity_series_null_semantics():
     toks = pd.Series([models.stub_tokenize_one("hello world"), None, ""], dtype="object")
     langs = pd.Series(["en", "en", "xx"], dtype="object")
