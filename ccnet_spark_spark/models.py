@@ -196,7 +196,8 @@ def stub_tokenize_one(text: str) -> str:
     a '▁'-prefixed head piece plus 3-char continuation pieces.
 
     Same output contract as /root/reference/pipe_tokenized.py:24-33
-    (space-joined piece string).
+    (space-joined piece string). The per-row spec: stub_tokenize, which
+    the UDFs call, is pinned to it in tests/test_stub_batch_equiv.py.
     """
     text = strip_accents((text or "").lower())
     text = _NON_PRINT_RE.sub("", re.sub(r"\d", "0", text))
@@ -208,16 +209,61 @@ def stub_tokenize_one(text: str) -> str:
     return " ".join(pieces)
 
 
+_DIGIT_RE = re.compile(r"\d")
+
+
+class _TokenizerCharMap(dict):
+    """str.translate table doing stub_tokenize_one's per-char steps on an
+    NFD string in one pass: combining marks (category Mn) and non-printing
+    chars are deleted, decimal digits become "0", everything else maps to
+    itself. Entries are made on first sight of a code point, not by a
+    scan of all 1.1M code points at import (0.3 s per worker process).
+    Identity chars are stored too, so a lookup never raises KeyError
+    inside translate. Past _CAP entries new code points are still mapped,
+    just no longer stored, which bounds the table at a few MB."""
+
+    _CAP = 1 << 16
+
+    def __missing__(self, cp: int):
+        import unicodedata
+
+        c = chr(cp)
+        if unicodedata.category(c) == "Mn" or _NON_PRINT_RE.match(c):
+            out = None
+        else:
+            out = "0" if _DIGIT_RE.match(c) else cp
+        if len(self) < self._CAP:
+            self[cp] = out
+        return out
+
+
+_TOKENIZER_CHARS = _TokenizerCharMap()
+# "\x00" marks word starts (the char map deletes every "\x00" of the
+# text); a piece is an optional marker plus up to 3 chars of one word
+_PIECE_RE = re.compile(r"\x00?[^\x00]{1,3}")
+
+
 def stub_tokenize(texts: pd.Series, langs: pd.Series) -> pd.Series:
-    """Unknown/null lang -> null (mirrors reference's unknown-lang None).
-    Deliberately a per-row loop: a fully pandas-vectorized variant (NFD
-    normalize + 6 chained full-series regex passes) was measured 2-3x
-    SLOWER than this loop on both caption- and document-length text —
-    each .str pass re-walks and re-allocates the whole series, while the
-    loop does all steps in one pass per string."""
-    out = []
+    """stub_tokenize_one over a batch; unknown/null lang -> null (mirrors
+    the reference's unknown-lang None). Same output as the spec (pinned in
+    tests/test_stub_batch_equiv.py), with C-level string ops per row:
+    ASCII text skips NFD (it is its own decomposition), one str.translate
+    does the mark/digit/non-printing steps, and one regex findall cuts
+    the marked words into pieces. ~0.75 s against ~1.5 s for the spec per
+    10k bench captions (~640 chars, 59% ASCII) on a 4-core x86 VM."""
+    import unicodedata
+
+    out: list[str | None] = []
     for text, lang in zip(texts, langs):
-        out.append(stub_tokenize_one(text) if lang in VOCAB else None)
+        if lang not in VOCAB:
+            out.append(None)
+            continue
+        text = (text or "").lower()
+        if not text.isascii():
+            text = unicodedata.normalize("NFD", text)
+        words = text.translate(_TOKENIZER_CHARS).split()
+        pieces = _PIECE_RE.findall("\x00" + "\x00".join(words))
+        out.append(" ".join(pieces).replace("\x00", "▁"))
     return pd.Series(out, dtype="object")
 
 

@@ -85,10 +85,10 @@ def make_tok_pp_udf(lm_dir: str | None = None):
     def tok_pp_udf(texts: pd.Series, langs: pd.Series) -> pd.DataFrame:
         use_real = lm_dir and os.path.isdir(lm_dir)
         if not use_real:
-            # stub path fully batch-vectorized (guide §4.2): one pandas
-            # str-op chain for the tokenizer, closed-form numpy for the
-            # perplexity — no per-row Python. The per-row loop below stays
-            # for the real-model path (model.score is per line anyway).
+            # stub path batched: C-level string ops per row for the
+            # tokenizer, closed-form numpy for the perplexity. The per-row
+            # loop below stays for the real-model path (model.score is
+            # per line anyway).
             tok = models.stub_tokenize(texts, langs)
             pp = models.stub_perplexity(tok, langs)
             return pd.DataFrame(

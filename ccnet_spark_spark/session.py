@@ -14,10 +14,27 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-# Defaults chosen for a local[N] single-JVM sandbox; on a real cluster these
-# are overridden by spark-submit conf (executor memory/cores, shuffle service,
-# dynamic allocation) — the code below never assumes local mode.
-_LOCAL_DRIVER_MEMORY = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
+
+def driver_memory_for(mem_total_kb: int | None) -> str:
+    """Default heap of a local[N] driver JVM (SPARK_GRAFT_DRIVER_MEM or
+    spark-submit conf win; a cluster submit sizes its own): half of the
+    host's RAM, 1g-48g, 48g when the RAM is unknown. A fixed 48g let a
+    test JVM grow to 14 GB RSS on a 16 GB host, where the kernel killed
+    it."""
+    if mem_total_kb is None:
+        return "48g"
+    return f"{max(1, min(48, mem_total_kb // 2**21))}g"
+
+
+def _mem_total_kb() -> int | None:
+    try:
+        with open("/proc/meminfo") as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1])
+    except OSError:
+        pass
+    return None
 
 
 def iceberg_configured() -> bool:
@@ -218,7 +235,8 @@ def get_spark(
         b = conf_if_absent(b, key, value)
     if master is not None:
         # driver memory is ours to size only when we launch the local JVM
-        b = conf_if_absent(b, "spark.driver.memory", _LOCAL_DRIVER_MEMORY)
+        heap = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or driver_memory_for(_mem_total_kb())
+        b = conf_if_absent(b, "spark.driver.memory", heap)
     if iceberg_configured():
         # Production path: a hadoop-catalog Iceberg warehouse. Safe to set
         # only when the jar is actually on the classpath.

@@ -21,6 +21,7 @@ from ccnet_spark_spark.functions.hashing import line_hash_py, simhash64
 from ccnet_spark_spark.functions.normalize import normalize_for_dedup_py
 from ccnet_spark_spark.functions.scrub import scrub_py
 from ccnet_spark_spark.models import (
+    _CLOSED_FORM,
     stub_perplexity_one,
     stub_tokenize_one,
     strip_accents,
@@ -70,6 +71,13 @@ class TestModelStubProperties:
     def test_perplexity_positive_and_total(self, s):
         pp = stub_perplexity_one(stub_tokenize_one(s))
         assert pp > 0
+
+    @given(text_any)
+    @settings(max_examples=300, deadline=None)
+    def test_tokenize_output_fits_perplexity_closed_form(self, s):
+        # the fused tokenize+perplexity crossing scores every row in closed
+        # form and never falls back to the per-row stub_perplexity_one
+        assert _CLOSED_FORM.fullmatch(stub_tokenize_one(s)) is not None
 
     @given(text_any)
     @settings(max_examples=200, deadline=None)

@@ -39,6 +39,20 @@ def test_default_local_star(monkeypatch):
     assert master == "local[*]" and n and n >= 1
 
 
+@pytest.mark.parametrize(
+    "mem_total_kb, heap",
+    [
+        (16 * 2**20, "8g"),  # 16 GiB host
+        (15_990_000, "7g"),  # a "16 GB" VM's MemTotal
+        (256 * 2**20, "48g"),  # capped
+        (1_000_000, "1g"),  # floored
+        (None, "48g"),  # no /proc/meminfo
+    ],
+)
+def test_default_driver_memory_fits_host(mem_total_kb, heap):
+    assert session.driver_memory_for(mem_total_kb) == heap
+
+
 class _RecordingBuilder:
     """Stands in for SparkSession.builder: records what get_spark sets."""
 
@@ -80,6 +94,20 @@ def test_submitted_conf_survives_get_spark(monkeypatch, key, default):
     monkeypatch.setattr(session, "_submitted_conf", lambda: submitted)
     session.get_spark(cores=2)
     assert key not in builder.conf  # spark-submit's value stays in force
+
+
+def test_local_driver_heap_follows_host_unless_env_sets_it(monkeypatch):
+    monkeypatch.setattr(session, "_submitted_conf", lambda: SparkConf(loadDefaults=False))
+    monkeypatch.setattr(session, "_mem_total_kb", lambda: 16 * 2**20)
+    for env, heap in [(None, "8g"), ("3g", "3g")]:
+        if env is None:
+            monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+        else:
+            monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", env)
+        builder = _RecordingBuilder()
+        monkeypatch.setattr(session.SparkSession, "builder", builder)
+        session.get_spark(cores=2)
+        assert builder.conf["spark.driver.memory"] == heap
 
 
 def test_warm_query_compiles_no_classes(spark, tmp_path):

@@ -1,6 +1,7 @@
-"""Fuzz-pins for the r6 stub-model fast paths: the batched/packed
+"""Fuzz-pins for the stub-model fast paths: the batched/packed
 implementations the Arrow UDFs run must be bit-identical to the per-row
-reference spec functions (stub_predict_lang_one / stub_perplexity_one).
+reference spec functions (stub_predict_lang_one / stub_tokenize_one /
+stub_perplexity_one).
 
 These exist because the optimization round changed the stub INTERNALS
 (packed-mask LID accumulation, closed-form vectorized perplexity) without
@@ -11,6 +12,8 @@ from __future__ import annotations
 import random
 
 import pandas as pd
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from ccnet_spark_spark import models
 
@@ -50,6 +53,39 @@ def test_stub_predict_lang_threshold_passthrough():
         assert batch["lang"].iloc[i] == lang
         b = batch["score"].iloc[i]
         assert (score is None and pd.isna(b)) or score == float(b)
+
+
+def _tokenize_batch_vs_spec(texts: list, langs: list) -> None:
+    batch = models.stub_tokenize(pd.Series(texts, dtype="object"), pd.Series(langs, dtype="object"))
+    assert len(batch) == len(texts)
+    for t, lang, got in zip(texts, langs, batch):
+        want = models.stub_tokenize_one(t) if lang in models.VOCAB else None
+        assert got == want, (t, lang)
+
+
+def test_stub_tokenize_matches_per_row_spec():
+    # combining marks, non-ASCII digits, control chars, NEL/NBSP/
+    # ideographic space, dotted capital I, ligature, astral digit, and the
+    # piece marker and the batch path's word marker inside words
+    alphabet = "aZé\u0301\u0308ß9\u0663\U0001d7d9 \t\n\r\x85\xa0\u3000\x00\x1f\x7f\x9f▁İﬁ中文x"
+    rng = random.Random(31)
+    texts = ["".join(rng.choice(alphabet) for _ in range(rng.randint(0, 40))) for _ in range(20000)]
+    texts += _fuzz_texts(2000, seed=37) + ["▁abc▁▁def", "\x00ab\x00cd", "ÉCOLE 42", "a" * 10]
+    _tokenize_batch_vs_spec(texts, ["fr"] * len(texts))
+
+
+def test_stub_tokenize_null_text_and_unknown_lang():
+    texts = ["Hello World", None, "", "Été", None, "der Hund"]
+    langs = ["en", "en", "de", None, None, "xx"]
+    _tokenize_batch_vs_spec(texts, langs)
+    out = models.stub_tokenize(pd.Series(texts, dtype="object"), pd.Series(langs, dtype="object"))
+    assert out.tolist() == ["▁hel lo ▁wor ld", "", "", None, None, None]
+
+
+@given(st.text(max_size=200))
+@settings(max_examples=300, deadline=None)
+def test_stub_tokenize_matches_spec_on_any_text(s):
+    _tokenize_batch_vs_spec([s], ["zh"])
 
 
 def test_stub_perplexity_batch_matches_per_row_spec():
