@@ -51,7 +51,6 @@ from ccnet_spark_spark.operators import (
     quality_rules,
     sample,
     similarity,
-    tokenize,
 )
 from ccnet_spark_spark.operators import lm as lm_op
 from ccnet_spark_spark.operators import nb_lid as nb_lid_op
@@ -301,8 +300,7 @@ def entry(spark: SparkSession) -> DataFrame:
         "dedup_caption", F.regexp_replace("dedup_caption", "\n", " ")
     )
     enriched = regrouped.join(docs.select("doc_id", "lang"), "doc_id")
-    enriched = tokenize.with_tokenized(enriched, "dedup_caption")
-    enriched = perplexity.with_perplexity(enriched, "tokenized")
+    enriched = perplexity.with_tokenized_and_perplexity(enriched, "dedup_caption")
     out = bucket_op.with_bucket(enriched, bucket_op.load_cutoffs(spark, cutoffs=_cutoffs()))
     return (
         out.groupBy("lang", "bucket")

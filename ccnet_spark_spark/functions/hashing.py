@@ -59,6 +59,17 @@ def word_shingles_expr(tokens: Column, n: int = 3) -> Column:
     return F.when(F.size(tokens) >= n, shingles).otherwise(F.array().cast("array<string>"))
 
 
+def word_shingles_sql(toks: str, n: int) -> str:
+    """DuckDB twin of word_shingles_expr: space-joined word n-grams, empty
+    list when fewer than n tokens."""
+    gram = " || ' ' || ".join(f"list_extract({toks}, i + {j + 1})" for j in range(n))
+    return (
+        f"case when len({toks}) >= {n} then "
+        f"list_transform(range(0, len({toks}) - {n - 1}), i -> {gram}) "
+        f"else [] end"
+    )
+
+
 def minhash_sql(shingles_expr: str, num_hashes: int = 16) -> str:
     """DuckDB twin of the sha2 MinHash in operators/dedup.minhash_signatures:
     for num_hashes <= 8, all per-seed hashes are 8-hex SLICES of one sha256

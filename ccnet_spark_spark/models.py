@@ -8,7 +8,9 @@ cachetools per-worker model cache. Here:
 - the *interface* is batch-vectorized (pandas Series in/out) so it plugs
   straight into Arrow pandas UDFs,
 - real models load lazily once per Python worker via a module-level
-  singleton (``_MODEL_CACHE``) and are used when their libs/weights exist,
+  singleton (``_load_once`` over ``_MODEL_CACHE``) and are used when their
+  libs/weights exist; ``predict_lang``, ``tokenize`` and ``perplexity``
+  are the whole real-or-stub decision, and the UDFs only wrap them,
 - deterministic **stub models** implement the same signatures with pure
   arithmetic so correctness gates run with no downloads. The stubs are
   shared verbatim by the engine and the test oracle, and the perplexity
@@ -333,23 +335,53 @@ def stub_perplexity(tokenized: pd.Series, langs: pd.Series) -> pd.Series:
 
 
 # ------------------------------------------------------------- real models
-def _try_real_lid(model_path: str):
-    """fastText LID, lazily loaded once per worker; None if unavailable."""
-    key = ("fasttext", model_path)
+def _load_once(key: tuple, load):
+    """The per-worker model singleton: load() runs once per key, and a
+    missing or broken lib/weights is cached as None so callers fall back
+    to the stub instead of failing the job (or retrying every batch)."""
     if key not in _MODEL_CACHE:
         try:
-            import fasttext  # noqa: F401  (not in sandbox image)
-
-            _MODEL_CACHE[key] = fasttext.load_model(model_path)
+            _MODEL_CACHE[key] = load()
         except Exception:
             _MODEL_CACHE[key] = None
     return _MODEL_CACHE[key]
 
 
+def _lid_model(model_path: str):
+    def load():
+        import fasttext  # optional dependency: ImportError -> stub
+
+        return fasttext.load_model(model_path)
+
+    return _load_once(("fasttext", model_path), load)
+
+
+def _sp_model(lang: str, lm_dir: str):
+    def load():
+        import sentencepiece  # optional dependency: ImportError -> stub
+
+        sp = sentencepiece.SentencePieceProcessor()
+        sp.load(os.path.join(lm_dir, f"{lang}.sp.model"))
+        return sp
+
+    return _load_once(("sp", lang, lm_dir), load)
+
+
+def _kenlm_model(lang: str, lm_dir: str):
+    def load():
+        import kenlm  # optional dependency: ImportError -> stub
+
+        cfg = kenlm.Config()
+        cfg.load_method = 2  # lazy mmap — page-cache friendly
+        return kenlm.Model(os.path.join(lm_dir, f"{lang}.arpa.bin"), cfg)
+
+    return _load_once(("kenlm", lang, lm_dir), load)
+
+
 def predict_lang(texts: pd.Series, model_path: str | None = None, threshold: float = LID_THRESHOLD) -> pd.DataFrame:
     """Batch LID. Uses real fastText when model_path exists + lib importable
     (fastText predict() is natively batched over a list), else the stub."""
-    model = _try_real_lid(model_path) if model_path and os.path.exists(model_path) else None
+    model = _lid_model(model_path) if model_path and os.path.exists(model_path) else None
     if model is None:
         return stub_predict_lang(texts, threshold)
     clean = [(t or "").replace("\n", " ") for t in texts]
@@ -364,3 +396,45 @@ def predict_lang(texts: pd.Series, model_path: str | None = None, threshold: flo
             langs.append(lab[0].replace("__label__", ""))
             scores.append(score)
     return pd.DataFrame({"lang": langs, "score": pd.array(scores, dtype="float64")})
+
+
+def tokenize(texts: pd.Series, langs: pd.Series, lm_dir: str | None = None) -> pd.Series:
+    """Batch tokenize (reference M2, pipe_tokenized.py:24-33): per row, the
+    lang's SentencePiece model from lm_dir when it loads, else the stub for
+    stub languages, else null. NULL text tokenizes as "" on both paths.
+    No lm_dir -> stub_tokenize over the whole batch."""
+    if not (lm_dir and os.path.isdir(lm_dir)):
+        return stub_tokenize(texts, langs)
+    out: list[str | None] = []
+    for text, lang in zip(texts, langs):
+        sp = _sp_model(lang, lm_dir) if lang else None
+        if sp is not None:
+            out.append(" ".join(sp.encode_as_pieces(text or "")))
+        else:
+            out.append(stub_tokenize_one(text) if lang in VOCAB else None)
+    return pd.Series(out, dtype="object")
+
+
+def perplexity(tokenized: pd.Series, langs: pd.Series, lm_dir: str | None = None) -> pd.Series:
+    """Batch document perplexity (reference M3, pipe_perplexity.py:21-36):
+    per line, score = Σ log10 p(piece), length = len(split) + 1; doc pp =
+    round(10^(-Σscore/Σlength), 1). Per row, the lang's KenLM model from lm_dir when it loads, else the stub
+    for stub languages, else null; null tokens -> null. No lm_dir ->
+    stub_perplexity over the whole batch."""
+    if not (lm_dir and os.path.isdir(lm_dir)):
+        return stub_perplexity(tokenized, langs)
+    out: list[float | None] = []
+    # per row, not batched: KenLM scores one line per call anyway
+    for tok, lang in zip(tokenized, langs):
+        model = _kenlm_model(lang, lm_dir) if lang else None
+        if tok is None:
+            out.append(None)
+        elif model is None:
+            out.append(stub_perplexity_one(tok) if lang in VOCAB else None)
+        else:
+            score, length = 0.0, 0
+            for line in tok.split("\n"):
+                score += model.score(line)
+                length += len(line.split()) + 1
+            out.append(round(10.0 ** (-score / length), 1))
+    return pd.Series(out, dtype="float64")

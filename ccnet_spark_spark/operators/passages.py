@@ -27,11 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ccnet_spark_spark.functions.hashing import word_shingles_expr
-
-
-def _toks(text):
-    return F.split(F.lower(F.trim(text)), r"\s+")
+from ccnet_spark_spark.functions.hashing import word_shingles_expr, word_shingles_sql
+from ccnet_spark_spark.operators.quality_rules import _toks, _toks_sql
 
 
 def duplicate_passage_spans(
@@ -163,15 +160,6 @@ def trim_duplicate_passages(
     )
 
 
-def _shingles_sql(toks: str, n: int) -> str:
-    gram = " || ' ' || ".join(f"list_extract({toks}, i + {j + 1})" for j in range(n))
-    return (
-        f"case when len({toks}) >= {n} then "
-        f"list_transform(range(0, len({toks}) - {n - 1}), i -> {gram}) "
-        f"else [] end"
-    )
-
-
 def duplicate_passage_spans_sql(
     rel: str,
     id_col: str = "doc_id",
@@ -180,11 +168,11 @@ def duplicate_passage_spans_sql(
     min_occurrences: int = 2,
 ) -> str:
     """DuckDB twin as a WITH body; caller selects from `spans`."""
-    toks = f"regexp_split_to_array(lower(trim({text_col})), '\\s+')"
+    toks = _toks_sql(text_col)
     return (
         f"base as (select {id_col}, {toks} as toks from {rel}), "
         f"grams as (select {id_col}, generate_subscripts(sh, 1) - 1 as pos, unnest(sh) as gram "
-        f"from (select {id_col}, {_shingles_sql('toks', gram_n)} as sh from base)), "
+        f"from (select {id_col}, {word_shingles_sql('toks', gram_n)} as sh from base)), "
         f"dupg as (select gram from grams group by gram having count(*) >= {min_occurrences}), "
         f"dup as (select g.{id_col}, g.pos from grams g where exists "
         f"(select 1 from dupg d where d.gram = g.gram)), "

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ccnet_spark_spark.functions.hashing import word_shingles_expr
+from ccnet_spark_spark.functions.hashing import word_shingles_expr, word_shingles_sql
 
 # Gopher thresholds (Rae et al. 2021, table A1): drop when value EXCEEDS.
 TOP_NGRAM_MAX = {2: 0.20, 3: 0.18, 4: 0.16}
@@ -40,17 +40,6 @@ def _toks(text: Column) -> Column:
 
 def _toks_sql(expr: str) -> str:
     return f"regexp_split_to_array(lower(trim({expr})), '\\s+')"
-
-
-def _shingles_sql(toks: str, n: int) -> str:
-    """DuckDB twin of hashing.word_shingles_expr: space-joined word n-grams,
-    empty list when fewer than n tokens."""
-    gram = " || ' ' || ".join(f"list_extract({toks}, i + {j + 1})" for j in range(n))
-    return (
-        f"case when len({toks}) >= {n} then "
-        f"list_transform(range(0, len({toks}) - {n - 1}), i -> {gram}) "
-        f"else [] end"
-    )
 
 
 # ---------------------------------------------------------------- n-grams
@@ -264,7 +253,7 @@ def gopher_ngram_stats_sql(
     ns = sorted(set(top_ns) | set(dup_ns))
     toks = _toks_sql(text_col)
     gram_lists = " || ".join(
-        f"list_transform({_shingles_sql('toks', n)}, g -> {{'n': {n}, 'gram': g}})" for n in ns
+        f"list_transform({word_shingles_sql('toks', n)}, g -> {{'n': {n}, 'gram': g}})" for n in ns
     )
     stat_cols, keep_terms = [], []
     for n in top_ns:

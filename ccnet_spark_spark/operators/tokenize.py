@@ -1,14 +1,8 @@
-"""SentencePiece tokenization (reference M2,
-/root/reference/pipe_tokenized.py:24-33) as a vectorized pandas UDF.
-
-Real SentencePiece models load once per Python worker via models._MODEL_CACHE
-when the lib + per-lang {lang}.sp.model files exist; the deterministic stub
-(models.stub_tokenize) runs otherwise. Unknown/null lang -> null, matching
-the reference."""
+"""SentencePiece tokenization (reference M2, pipe_tokenized.py:24-33) as a
+vectorized pandas UDF over models.tokenize: real SentencePiece or the
+deterministic stub, unknown/null lang -> null, matching the reference."""
 
 from __future__ import annotations
-
-import os
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -18,35 +12,10 @@ from pyspark.sql import types as T
 from .. import models
 
 
-def _real_sp(lang: str, lm_dir: str):
-    key = ("sp", lang, lm_dir)
-    if key not in models._MODEL_CACHE:
-        try:
-            import sentencepiece  # noqa: F401 (not in sandbox image)
-
-            path = os.path.join(lm_dir, f"{lang}.sp.model")
-            sp = sentencepiece.SentencePieceProcessor()
-            sp.load(path)
-            models._MODEL_CACHE[key] = sp
-        except Exception:
-            models._MODEL_CACHE[key] = None
-    return models._MODEL_CACHE[key]
-
-
 def make_tokenize_udf(lm_dir: str | None = None):
     @F.pandas_udf(T.StringType())
     def tokenize_udf(texts: pd.Series, langs: pd.Series) -> pd.Series:
-        if lm_dir and os.path.isdir(lm_dir):
-            out = []
-            # group-by-lang inside the Arrow batch: one model lookup per lang
-            for text, lang in zip(texts, langs):
-                sp = _real_sp(lang, lm_dir) if lang else None
-                if sp is None:
-                    out.append(models.stub_tokenize_one(text) if lang in models.VOCAB else None)
-                else:
-                    out.append(" ".join(sp.encode_as_pieces(text)))
-            return pd.Series(out, dtype="object")
-        return models.stub_tokenize(texts, langs)
+        return models.tokenize(texts, langs, lm_dir)
 
     return tokenize_udf
 

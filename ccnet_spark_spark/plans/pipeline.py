@@ -136,6 +136,9 @@ class Pipeline:
     def __init__(self, spark: SparkSession, config: Config | None = None):
         self.spark = spark
         self.config = config or Config()
+        steps = self.config.steps
+        if "lm" in steps and "sp" not in steps and not self.config.lm_artifact:
+            raise ValueError('step "lm" scores the "sp" tokens: add "sp" to steps, or set lm_artifact')
 
     def run(self, pairs: DataFrame, id_col: str = "image_id", text_col: str = "caption") -> DataFrame:
         """Run over any (id, text[, payload...]) table: image+caption pairs
@@ -314,7 +317,7 @@ class Pipeline:
         else:
             if "sp" in cfg.steps:
                 enriched = tokenize.with_tokenized(enriched, "dedup_caption", cfg.lm_dir)
-            if "lm" in cfg.steps and cfg.lm_artifact:
+            if "lm" in cfg.steps:  # lm_artifact set: checked in __init__
                 # trained-LM path: three broadcast joins + a DECIMAL sum
                 # per doc (operators/lm.py), joined back on the id; the
                 # scorer branches off `enriched` — checkpoint first or the
@@ -335,8 +338,6 @@ class Pipeline:
                     on=id_col,
                     how="left",
                 )
-            elif "lm" in cfg.steps:
-                enriched = perplexity.with_perplexity(enriched, "tokenized", cfg.lm_dir)
         if "drop" in cfg.steps and "sp" in cfg.steps:
             # reference DROP step (pipe_line.py:342-343)
             enriched = enriched.drop("tokenized")

@@ -102,7 +102,7 @@ def test_stub_perplexity_batch_matches_per_row_spec():
 
 
 def test_stub_perplexity_matches_spec_outside_closed_form():
-    """with_perplexity accepts any token string, not just tokenizer
+    """models.perplexity accepts any token string, not just tokenizer
     output: newlines and other whitespace, doubled/leading/trailing
     spaces and 7+-char pieces must still score like the per-row spec."""
     rng = random.Random(29)
