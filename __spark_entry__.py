@@ -1399,9 +1399,7 @@ def q_token_drift(spark, sf_dir):
 
     def dist(frame, pcol):
         counts = (
-            frame.select(
-                F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("token")
-            )
+            frame.select(F.explode(textstats.word_tokens_expr("text")).alias("token"))
             .groupBy("token")
             .agg(F.count(F.lit(1)).alias("_c"))
         )
@@ -3264,37 +3262,9 @@ def q_streaming_dedup(spark, sf_dir):
     survivor row is emitted per hash depends on arrival order, but the
     emitted HASH SET must equal the distinct normalized-text hashes of the
     input — exactly one row per hash, duplicates gone."""
-    docs = _docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("image_id"), F.col("text").alias("caption")
-    )
-    src, sink, ckpt = _stream_dirs("streaming_dedup")
-    docs.write.mode("append").parquet(src)
-    before = set(os.listdir(src))
-    dups = _docs(spark, sf_dir).where(F.col("doc_id") < 40).select(
-        (F.col("doc_id") + 100000).cast("string").alias("image_id"),
-        F.col("text").alias("caption"),
-    )
-    dups.coalesce(1).write.mode("append").parquet(src)
-    _bump_mtime_of_new_files(src, before)
     from ccnet_spark_spark.streaming.dedup import streaming_exact_dedup
 
-    stream = (
-        spark.readStream.schema("image_id string, caption string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        streaming_exact_dedup(stream)
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.read.parquet(sink).select("hash_value")
+    return _streaming_dedup_hashes(spark, sf_dir, "streaming_dedup", streaming_exact_dedup)
 
 
 def q_streaming_dedup_native(spark, sf_dir):
@@ -3307,10 +3277,19 @@ def q_streaming_dedup_native(spark, sf_dir):
     (maxFilesPerTrigger=1), so the keyed state must span batches."""
     from ccnet_spark_spark.streaming.dedup import streaming_native_dedup
 
+    return _streaming_dedup_hashes(spark, sf_dir, "streaming_dedup_native", streaming_native_dedup)
+
+
+def _streaming_dedup_hashes(
+    spark, sf_dir, name: str, dedup: Callable[[DataFrame], DataFrame]
+) -> DataFrame:
+    """Shared body of the two streaming dedup queries: docs, then their
+    first 40 again as a second file, streamed one file per trigger through
+    `dedup`; returns the emitted hash_value column."""
     docs = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("string").alias("image_id"), F.col("text").alias("caption")
     )
-    src, sink, ckpt = _stream_dirs("streaming_dedup_native")
+    src, sink, ckpt = _stream_dirs(name)
     docs.write.mode("append").parquet(src)
     before = set(os.listdir(src))
     dups = _docs(spark, sf_dir).where(F.col("doc_id") < 40).select(
@@ -3325,7 +3304,7 @@ def q_streaming_dedup_native(spark, sf_dir):
         .parquet(src)
     )
     q = (
-        streaming_native_dedup(stream)
+        dedup(stream)
         .writeStream.outputMode("append")
         .format("parquet")
         .option("path", sink)

@@ -28,6 +28,17 @@ def token_count_sql(expr: str) -> str:
     return f"case when length(trim({expr})) = 0 then 0 else len(regexp_split_to_array(trim({expr}), '\\s+')) end"
 
 
+def word_tokens_expr(col: Column | str) -> Column:
+    """Lowercase word tokens: the text trimmed and split on whitespace runs
+    (the token rule of the Gopher rules, passage dedup, decontamination,
+    the BPE vocabulary and repetition_ratio). Empty text gives ['']."""
+    return F.split(F.lower(F.trim(_c(col))), "\\s+")
+
+
+def word_tokens_sql(expr: str) -> str:
+    return f"regexp_split_to_array(lower(trim({expr})), '\\s+')"
+
+
 def bpe_token_count_expr(col: Column | str) -> Column:
     """Count of BPE-ish regex tokens (letters / digit runs / symbols)."""
     return F.size(F.regexp_extract_all(_c(col), F.lit(TOKEN_PATTERN), 0))
@@ -65,7 +76,7 @@ def repetition_ratio_expr(col: Column | str, n: int = 1) -> Column:
     high. Pure built-ins; 0.0 for docs with no n-grams."""
     from .hashing import word_shingles_expr
 
-    toks = F.split(F.lower(F.trim(_c(col))), "\\s+")
+    toks = word_tokens_expr(col)
     units = toks if n == 1 else word_shingles_expr(toks, n)
     total = F.size(units)
     ratio = F.when(total > 0, 1 - F.size(F.array_distinct(units)) / total).otherwise(F.lit(0.0))
@@ -73,7 +84,7 @@ def repetition_ratio_expr(col: Column | str, n: int = 1) -> Column:
 
 
 def repetition_ratio_sql(expr: str, n: int = 1) -> str:
-    toks = f"regexp_split_to_array(lower(trim({expr})), '\\s+')"
+    toks = word_tokens_sql(expr)
     if n == 1:
         units = toks
     else:

@@ -61,6 +61,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.textstats import word_tokens_expr
 from ..session import local_frame, release_local_checkpoint
 
 
@@ -68,7 +69,7 @@ def build_word_vocab(df: DataFrame, text_col: str = "text") -> DataFrame:
     """(word, freq) over the lowercased whitespace-split corpus — the one
     corpus-sized pass. Empty tokens (from empty docs) are dropped."""
     return (
-        df.select(F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("word"))
+        df.select(F.explode(word_tokens_expr(text_col)).alias("word"))
         .where(F.col("word") != "")
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))

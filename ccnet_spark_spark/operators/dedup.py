@@ -32,6 +32,13 @@ from pyspark.sql import functions as F
 
 from ..functions import hashing
 from ..functions.normalize import normalize_for_dedup_expr
+from ..functions.textstats import word_tokens_expr, word_tokens_sql
+
+
+def _dedup_tokens(text_col: str) -> Column:
+    """Word tokens of the dedup-normalized text (shingle input of the
+    MinHash and Jaccard operators)."""
+    return F.split(normalize_for_dedup_expr(F.col(text_col)), "\\s+")
 
 
 # --------------------------------------------------------------- line level
@@ -149,9 +156,7 @@ def minhash_signatures(df: DataFrame, id_col: str, text_col: str, num_hashes: in
     cheaper still. For identical shingle sets all variants band
     identically, which is what makes the fast path oracle-checkable on
     exact-dup labels."""
-    with_toks = df.select(
-        F.col(id_col), F.split(normalize_for_dedup_expr(F.col(text_col)), "\\s+").alias("_toks")
-    )
+    with_toks = df.select(F.col(id_col), _dedup_tokens(text_col).alias("_toks"))
     sh = hashing.word_shingles_expr(F.col("_toks"), n=shingle_n)
     exploded = with_toks.select(F.col(id_col), F.explode_outer(sh).alias("_shingle"))
     present = F.col("_shingle").isNotNull()
@@ -343,9 +348,7 @@ def lsh_then_jaccard(
     algo='xxhash64' is the production fast path (see minhash_signatures)."""
     sigs = minhash_signatures(df, id_col, text_col, num_hashes, shingle_n, algo=algo)
     cand = minhash_lsh_candidates(sigs, id_col, num_bands, num_hashes // num_bands)
-    with_toks = df.select(
-        F.col(id_col), F.split(normalize_for_dedup_expr(F.col(text_col)), "\\s+").alias("_toks")
-    )
+    with_toks = df.select(F.col(id_col), _dedup_tokens(text_col).alias("_toks"))
     sh = with_toks.select(
         F.col(id_col),
         F.array_distinct(hashing.word_shingles_expr(F.col("_toks"), n=shingle_n)).alias("_sh"),
@@ -410,7 +413,7 @@ def fuzzy_decontaminate(
     )
 
     def shingle_sets(frame, col, tcol):
-        toks = F.split(normalize_for_dedup_expr(F.col(tcol)), "\\s+")
+        toks = _dedup_tokens(tcol)
         return frame.select(
             F.col(col), F.array_distinct(hashing.word_shingles_expr(toks, n=shingle_n)).alias("_sh")
         )
@@ -435,9 +438,7 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str, shingle_n: in
     shingles: explode shingles, self-join on shingle, count shared, compute
     |A∩B| / (|A|+|B|-|A∩B|), filter >= threshold. Quadratic only within
     shingle buckets — at scale, run AFTER minhash banding to verify."""
-    with_toks = df.select(
-        F.col(id_col), F.split(normalize_for_dedup_expr(F.col(text_col)), "\\s+").alias("_toks")
-    )
+    with_toks = df.select(F.col(id_col), _dedup_tokens(text_col).alias("_toks"))
     # the distinct-set SIZE rides ALONG the exploded rows (computed in the
     # same projection as the explode) instead of being re-derived by a
     # separate explode+groupBy joined back per side — the old form ran the
@@ -512,9 +513,7 @@ def decontaminate(
     # element — O(shingle_n x tokens) re-splits per row (measured 20 s vs
     # 1.4 s on 5k docs at n=8)
     def _grams(frame: DataFrame, cols: list[str], text: str) -> DataFrame:
-        toked = frame.select(
-            *cols, F.split(F.lower(F.trim(F.col(text))), r"\s+").alias("_toks")
-        )
+        toked = frame.select(*cols, word_tokens_expr(text).alias("_toks"))
         return toked.select(
             *cols,
             F.explode(hashing.word_shingles_expr(F.col("_toks"), n=shingle_n)).alias("_gram"),
@@ -534,12 +533,8 @@ def decontaminate_sql(
     shingle_n: int = 8,
 ) -> str:
     """DuckDB twin as a WITH body (caller selects from `decontaminated`)."""
-    toks = f"regexp_split_to_array(lower(trim({text_col})), '\\s+')"
-    gram = " || ' ' || ".join(f"list_extract(toks, i + {j + 1})" for j in range(shingle_n))
-    shingles = (
-        f"case when len(toks) >= {shingle_n} then "
-        f"list_transform(range(0, len(toks) - {shingle_n - 1}), i -> {gram}) else [] end"
-    )
+    toks = word_tokens_sql(text_col)
+    shingles = hashing.word_shingles_sql("toks", shingle_n)
     return (
         f"eval_grams as (select distinct unnest({shingles}) as gram "
         f"from (select {toks} as toks from {eval_rel}) e), "
@@ -727,6 +722,28 @@ def bloom_might_contain(df: DataFrame, hv_col: str, words: list[int], k: int = 5
     return df.withColumn("_bloom_hit", _probe(F.array(*pos_cols)))
 
 
+def _hashed_sides(
+    batch: DataFrame,
+    corpus: DataFrame,
+    text_col: str,
+    hash_algo: str,
+    corpus_hv_col: str | None,
+) -> tuple[DataFrame, DataFrame]:
+    """(batch + its `_hv` normalized-text hash, the corpus `_hv` projection):
+    the inputs of both incremental dedup operators. corpus_hv_col reads a
+    stored hash column instead of re-hashing corpus text."""
+    hv = hashing.line_hash_expr(normalize_for_dedup_expr(F.col(text_col)), algo=hash_algo)
+    corpus_hv = F.col(corpus_hv_col) if corpus_hv_col is not None else hv
+    return batch.withColumn("_hv", hv), corpus.select(corpus_hv.alias("_hv"))
+
+
+def _keep_min_fresh(batch: DataFrame, fresh: DataFrame, id_col: str) -> DataFrame:
+    """Rows of `batch` that are the min id of their hash among `fresh`
+    (the batch rows whose hash the corpus lacks): keep-min within the batch."""
+    keep_min = fresh.groupBy("_hv").agg(F.min(F.col(id_col)).alias(id_col)).select(id_col)
+    return batch.join(keep_min, id_col, "left_semi")
+
+
 def incremental_dedup_bloom(
     batch: DataFrame,
     corpus: DataFrame,
@@ -764,14 +781,7 @@ def incremental_dedup_bloom(
     corpus_hv_col: name of a precomputed hash column on `corpus` (the
     committed hash SIDECAR, as tools/bench_bloom.py uses) — at scale the
     corpus hash projection is stored, not recomputed from text per batch."""
-    def hashed(df: DataFrame) -> Column:
-        return hashing.line_hash_expr(normalize_for_dedup_expr(F.col(text_col)), algo=hash_algo)
-
-    batch_h = batch.withColumn("_hv", hashed(batch))
-    if corpus_hv_col is not None:
-        corpus_h = corpus.select(F.col(corpus_hv_col).alias("_hv"))
-    else:
-        corpus_h = corpus.select(hashed(corpus).alias("_hv"))
+    batch_h, corpus_h = _hashed_sides(batch, corpus, text_col, hash_algo, corpus_hv_col)
     if words is None:
         words = build_bloom_words(corpus_h, "_hv", m_bits=m_bits, k=k)
     probed = bloom_might_contain(batch_h, "_hv", words, k=k)
@@ -786,8 +796,7 @@ def incremental_dedup_bloom(
     )
     checked = maybe.join(F.broadcast(committed), "_hv", "left_anti")
     fresh = definitely_new.unionByName(checked)
-    keep_min = fresh.groupBy("_hv").agg(F.min(F.col(id_col)).alias(id_col)).select(id_col)
-    return batch.join(keep_min, id_col, "left_semi")
+    return _keep_min_fresh(batch, fresh, id_col)
 
 
 def incremental_dedup(
@@ -807,14 +816,6 @@ def incremental_dedup(
     against itself). Also dedups within the batch (keep-min), so the result
     is append-ready. corpus_hv_col: precomputed hash column on `corpus`
     (the committed hash sidecar) instead of re-hashing corpus text."""
-    def hashed(df: DataFrame) -> Column:
-        return hashing.line_hash_expr(normalize_for_dedup_expr(F.col(text_col)), algo=hash_algo)
-
-    batch_h = batch.withColumn("_hv", hashed(batch))
-    if corpus_hv_col is not None:
-        corpus_h = corpus.select(F.col(corpus_hv_col).alias("_hv"))
-    else:
-        corpus_h = corpus.select(hashed(corpus).alias("_hv"))
+    batch_h, corpus_h = _hashed_sides(batch, corpus, text_col, hash_algo, corpus_hv_col)
     fresh = batch_h.join(corpus_h, "_hv", "left_anti")
-    keep_min = fresh.groupBy("_hv").agg(F.min(F.col(id_col)).alias(id_col)).select(id_col)
-    return batch.join(keep_min, id_col, "left_semi")
+    return _keep_min_fresh(batch, fresh, id_col)

@@ -65,35 +65,18 @@ def image_stats(df: DataFrame) -> DataFrame:
     return df.select("image_id", "bytes", "fmt").mapInPandas(op, schema=STATS_SCHEMA)
 
 
-META_SCRUB_SCHEMA = "image_id string, bytes binary, fmt string, n_meta_removed int"
-
-
 def scrub_image_metadata(df: DataFrame) -> DataFrame:
     """Image-side PII scrub — the payload analog of the caption regex
     scrub: strip every header comment (the PPM/Netpbm carrier for EXIF-ish
     creator/GPS tags) and re-emit the canonical header, leaving raster
     bytes untouched so decoded pixels are bit-identical (the north rule's
-    payload invariant holds by construction, not by tolerance). One
-    Arrow-batched mapInPandas pass; n_meta_removed is the per-image audit
-    count the metrics sidecar aggregates. Real EXIF strip for jpeg/png
-    slots in behind codecs.strip_metadata when Pillow is available."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for img_id, data, fmt in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                clean, n = codecs.strip_metadata(bytes(data), fmt)
-                rows.append(
-                    {
-                        "image_id": img_id,
-                        "bytes": bytearray(clean),
-                        "fmt": fmt,
-                        "n_meta_removed": n,
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return df.select("image_id", "bytes", "fmt").mapInPandas(op, schema=META_SCRUB_SCHEMA)
+    payload invariant holds by construction, not by tolerance). The narrow
+    form of scrub_metadata_passthrough: (image_id, bytes, fmt,
+    n_meta_removed), where n_meta_removed is the per-image audit count the
+    metrics sidecar aggregates and a NULL payload stays NULL with count 0.
+    Real EXIF strip for jpeg/png slots in behind codecs.strip_metadata
+    when Pillow is available."""
+    return scrub_metadata_passthrough(df.select("image_id", "bytes", "fmt"))
 
 
 def scrub_metadata_passthrough(pairs: DataFrame) -> DataFrame:
@@ -133,29 +116,13 @@ RESIZE_SCHEMA = "image_id string, bytes binary, w int, h int, fmt string"
 
 
 def resize(df: DataFrame, target: int = 16) -> DataFrame:
-    """Nearest-neighbor resize to target x target, re-encoded lossless ppm.
+    """Nearest-neighbor resize to target x target, re-encoded lossless ppm:
+    resize_to with the same target on both sides.
     (Real bilinear/Lanczos requires Pillow — same plumbing.)"""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for img_id, data, fmt in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                px = codecs.decode(bytes(data), fmt)
-                ys = (np.arange(target) * px.shape[0] // target).clip(0, px.shape[0] - 1)
-                xs = (np.arange(target) * px.shape[1] // target).clip(0, px.shape[1] - 1)
-                out = px[np.ix_(ys, xs)]
-                rows.append(
-                    {
-                        "image_id": img_id,
-                        "bytes": bytearray(codecs.encode_ppm(out)),
-                        "w": target,
-                        "h": target,
-                        "fmt": "ppm",
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return df.select("image_id", "bytes", "fmt").mapInPandas(op, schema=RESIZE_SCHEMA)
+    side = F.lit(target)
+    return resize_to(
+        df.select("image_id", "bytes", "fmt", side.alias("target_w"), side.alias("target_h"))
+    )
 
 
 def resize_to(
@@ -163,10 +130,10 @@ def resize_to(
 ) -> DataFrame:
     """Per-ROW-target nearest-neighbor resize + lossless ppm re-encode —
     the downstream of operators/aspect.aspect_bucket (each image resizes
-    to ITS bucket's training resolution, the SDXL practice), unlike
-    `resize`'s single square target. Same spec as resize: output pixel
-    (y, x) samples source (y*H//th, x*W//tw) clipped — all-integer, so an
-    independent re-implementation is bit-exact. Rows with NULL targets
+    to ITS bucket's training resolution, the SDXL practice); `resize` is
+    its single-square-target form. Output pixel (y, x) samples source
+    (y*H//th, x*W//tw) clipped — all-integer, so an independent
+    re-implementation is bit-exact. Rows with NULL targets
     (bad dims upstream) are dropped — they have no bucket to train in."""
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

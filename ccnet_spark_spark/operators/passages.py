@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ccnet_spark_spark.functions.hashing import word_shingles_expr, word_shingles_sql
-from ccnet_spark_spark.operators.quality_rules import _toks, _toks_sql
+from ccnet_spark_spark.functions.textstats import word_tokens_expr, word_tokens_sql
 
 
 def duplicate_passage_spans(
@@ -45,7 +45,7 @@ def duplicate_passage_spans(
     indices into the whitespace-split lowercase text; end_tok is inclusive.
     """
     grams = (
-        df.select(F.col(id_col), _toks(F.col(text_col)).alias("_toks"))
+        df.select(F.col(id_col), word_tokens_expr(text_col).alias("_toks"))
         .select(
             id_col,
             F.posexplode(word_shingles_expr(F.col("_toks"), n=gram_n)).alias("_pos", "_gram"),
@@ -99,7 +99,7 @@ def dup_passage_stats(
     no duplicated span appear with zeros — the trimmer needs every doc."""
     spans = duplicate_passage_spans(df, id_col, text_col, gram_n=gram_n)
     per_doc = spans.groupBy(id_col).agg(F.sum("dup_tokens").alias("dup_tokens"))
-    base = df.select(F.col(id_col), F.size(_toks(F.col(text_col))).alias("n_tokens"))
+    base = df.select(F.col(id_col), F.size(word_tokens_expr(text_col)).alias("n_tokens"))
     out = base.join(per_doc, id_col, "left").select(
         id_col,
         "n_tokens",
@@ -168,7 +168,7 @@ def duplicate_passage_spans_sql(
     min_occurrences: int = 2,
 ) -> str:
     """DuckDB twin as a WITH body; caller selects from `spans`."""
-    toks = _toks_sql(text_col)
+    toks = word_tokens_sql(text_col)
     return (
         f"base as (select {id_col}, {toks} as toks from {rel}), "
         f"grams as (select {id_col}, generate_subscripts(sh, 1) - 1 as pos, unnest(sh) as gram "

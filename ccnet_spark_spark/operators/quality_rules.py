@@ -28,18 +28,18 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ccnet_spark_spark.functions.hashing import word_shingles_expr, word_shingles_sql
+from ccnet_spark_spark.functions.textstats import word_tokens_expr, word_tokens_sql
 
 # Gopher thresholds (Rae et al. 2021, table A1): drop when value EXCEEDS.
 TOP_NGRAM_MAX = {2: 0.20, 3: 0.18, 4: 0.16}
 DUP_NGRAM_MAX = {5: 0.15, 6: 0.14, 7: 0.13, 8: 0.12, 9: 0.11, 10: 0.10}
-
-
-def _toks(text: Column) -> Column:
-    return F.split(F.lower(F.trim(text)), r"\s+")
-
-
-def _toks_sql(expr: str) -> str:
-    return f"regexp_split_to_array(lower(trim({expr})), '\\s+')"
+# Gopher word gates (same table): keep inside these bounds. The minimum
+# word count stays a per-call min_words: Gopher's assumes full web pages,
+# and the corpus queries pass their own.
+MAX_WORDS = 100_000
+MIN_MEAN_WORD_LEN, MAX_MEAN_WORD_LEN = 3.0, 10.0
+MAX_SYMBOL_WORD_RATIO = 0.1
+MIN_ALPHA_WORD_FRAC = 0.8
 
 
 # ---------------------------------------------------------------- n-grams
@@ -77,16 +77,32 @@ def gopher_ngram_stats(
     (Catalyst re-inlines the nested lambda subtrees), while a generator
     over a plain shingle array stays fast. Don't \"optimize\" this back
     into one scan without re-measuring."""
+    base = df.select(F.col(id_col), word_tokens_expr(text_col).alias("_toks"))
+    return _repetition_stats(base, id_col, top_ns, dup_ns)
+
+
+def _repetition_stats(
+    base: DataFrame,
+    id_col: str,
+    top_ns: tuple[int, ...],
+    dup_ns: tuple[int, ...],
+    word_keep: Column | None = None,
+) -> DataFrame:
+    """gopher_ngram_stats' aggregation over `base` (id_col + the `_toks`
+    array). `word_keep`, an expression over base's columns, rides the
+    sentinel branch, which every doc emits exactly once, and comes out as
+    max(word_keep): the gram branches carry NULL, which max ignores. It
+    adds no shuffle."""
     ns = sorted(set(top_ns) | set(dup_ns))
-    toks = _toks(F.col(text_col))
-    base = df.select(F.col(id_col), toks.alias("_toks")).select(
-        id_col, "_toks", F.length(F.array_join(F.col("_toks"), " ")).alias("_total_chars")
-    )
-    branches = [
-        base.select(
-            id_col, "_total_chars", F.lit(0).alias("_n"), F.lit("").alias("_gram")
-        )
-    ]
+    base = base.withColumn("_total_chars", F.length(F.array_join(F.col("_toks"), " ")))
+    sentinel = [F.lit(0).alias("_n"), F.lit("").alias("_gram")]
+    gram_keep, count_keep, aggs = [], [], []
+    if word_keep is not None:
+        sentinel.append(word_keep.alias("_word_keep"))
+        gram_keep = [F.lit(None).cast("boolean").alias("_word_keep")]
+        count_keep = [F.max("_word_keep").alias("_word_keep")]
+        aggs = [F.max("_word_keep").alias("word_keep")]
+    branches = [base.select(id_col, "_total_chars", *sentinel)]
     for n in ns:
         branches.append(
             base.select(
@@ -94,6 +110,7 @@ def gopher_ngram_stats(
                 "_total_chars",
                 F.lit(n).alias("_n"),
                 F.explode(word_shingles_expr(F.col("_toks"), n)).alias("_gram"),
+                *gram_keep,
             )
         )
     exploded = branches[0]
@@ -101,11 +118,10 @@ def gopher_ngram_stats(
         exploded = exploded.union(b)
     counts = (
         exploded.groupBy(id_col, "_total_chars", "_n", "_gram")
-        .agg(F.count(F.lit(1)).alias("_cnt"))
+        .agg(F.count(F.lit(1)).alias("_cnt"), *count_keep)
         .withColumn("_chars", F.col("_cnt") * F.length("_gram"))
     )
     denom = F.greatest(F.first("_total_chars"), F.lit(1))
-    aggs = []
     for n in top_ns:
         aggs.append(
             F.round(
@@ -142,11 +158,6 @@ def gopher_gates(
     top_ns: tuple[int, ...] = (2, 3),
     dup_ns: tuple[int, ...] = (5,),
     min_words: int = 5,
-    max_words: int = 100_000,
-    min_mean_word_len: float = 3.0,
-    max_mean_word_len: float = 10.0,
-    max_symbol_word_ratio: float = 0.1,
-    min_alpha_word_frac: float = 0.8,
 ) -> DataFrame:
     """Gopher word gates AND n-gram repetition gates FUSED into one scan:
     (doc_id, word_keep, keep_rep) with the same semantics as
@@ -156,91 +167,17 @@ def gopher_gates(
 
     How: the word-rule verdict is a pure map-side expression over the same
     tokens the n-gram branches explode, so it is computed once on the
-    (0, '') sentinel branch (which every doc emits exactly once) and
-    carried through both aggregations as max(_word_keep) — nulls on the
-    gram branches are ignored by max, the sentinel's single non-null value
-    survives. Shuffle count is identical to gopher_ngram_stats alone.
-    Composed pipelines (corpus_build, quality_chain) use this; the
+    sentinel branch and carried through both aggregations (see
+    _repetition_stats). Shuffle count is identical to gopher_ngram_stats
+    alone. Composed pipelines (corpus_build, quality_chain) use this; the
     standalone per-family operators remain the unit-oracled entries."""
-    ns = sorted(set(top_ns) | set(dup_ns))
     base = df.select(
-        F.col(id_col), F.col(text_col).alias("_text"), _toks(F.col(text_col)).alias("_toks")
-    ).select(
-        id_col,
-        "_text",
-        "_toks",
-        F.length(F.array_join(F.col("_toks"), " ")).alias("_total_chars"),
+        F.col(id_col), F.col(text_col).alias("_text"), word_tokens_expr(text_col).alias("_toks")
     )
-    t, tk = F.col("_text"), F.col("_toks")
-    words = F.greatest(F.size(tk), F.lit(1))
-    sum_len = F.aggregate(tk, F.lit(0).cast("long"), lambda a, x: a + F.length(x))
-    hashes = F.length(t) - F.length(F.replace(t, F.lit("#"), F.lit("")))
-    ellipses = F.floor((F.length(t) - F.length(F.replace(t, F.lit("..."), F.lit("")))) / 3)
-    alpha = F.size(F.filter(tk, lambda x: x.rlike("[a-z]")))
-    # EXACTLY gopher_word_rules' keep: the comparisons run on the same
-    # 4dp-rounded values so fused and standalone verdicts can never diverge
-    word_keep = (
-        F.size(tk).cast("long").between(min_words, max_words)
-        & F.round(sum_len / words, 4).between(min_mean_word_len, max_mean_word_len)
-        & (F.round((hashes + ellipses) / words, 4) < max_symbol_word_ratio)
-        & (F.round(alpha / words, 4) >= min_alpha_word_frac)
+    word_keep = _word_keep(_word_stats(F.col("_text"), F.col("_toks")), min_words)
+    return _repetition_stats(base, id_col, top_ns, dup_ns, word_keep).select(
+        id_col, "word_keep", "keep_rep"
     )
-    branches = [
-        base.select(
-            id_col,
-            "_total_chars",
-            F.lit(0).alias("_n"),
-            F.lit("").alias("_gram"),
-            word_keep.alias("_word_keep"),
-        )
-    ]
-    for n in ns:
-        branches.append(
-            base.select(
-                id_col,
-                "_total_chars",
-                F.lit(n).alias("_n"),
-                F.explode(word_shingles_expr(F.col("_toks"), n)).alias("_gram"),
-                F.lit(None).cast("boolean").alias("_word_keep"),
-            )
-        )
-    exploded = branches[0]
-    for b in branches[1:]:
-        exploded = exploded.union(b)
-    counts = (
-        exploded.groupBy(id_col, "_total_chars", "_n", "_gram")
-        .agg(F.count(F.lit(1)).alias("_cnt"), F.max("_word_keep").alias("_word_keep"))
-        .withColumn("_chars", F.col("_cnt") * F.length("_gram"))
-    )
-    denom = F.greatest(F.first("_total_chars"), F.lit(1))
-    aggs = [F.max("_word_keep").alias("word_keep")]
-    for n in top_ns:
-        aggs.append(
-            F.round(
-                F.coalesce(F.max(F.when(F.col("_n") == n, F.col("_chars"))), F.lit(0)) / denom, 4
-            ).alias(f"top_{n}gram_char_frac")
-        )
-    for n in dup_ns:
-        aggs.append(
-            F.round(
-                F.least(
-                    F.lit(1.0),
-                    F.coalesce(
-                        F.sum(F.when((F.col("_n") == n) & (F.col("_cnt") >= 2), F.col("_chars"))),
-                        F.lit(0).cast("long"),
-                    )
-                    / denom,
-                ),
-                4,
-            ).alias(f"dup_{n}gram_char_frac")
-        )
-    out = counts.groupBy(id_col).agg(*aggs)
-    keep = F.lit(True)
-    for n in top_ns:
-        keep = keep & (F.col(f"top_{n}gram_char_frac") <= TOP_NGRAM_MAX.get(n, 0.16))
-    for n in dup_ns:
-        keep = keep & (F.col(f"dup_{n}gram_char_frac") <= DUP_NGRAM_MAX.get(n, 0.10))
-    return out.withColumn("keep_rep", keep).select(id_col, "word_keep", "keep_rep")
 
 
 def gopher_ngram_stats_sql(
@@ -251,7 +188,7 @@ def gopher_ngram_stats_sql(
     dup_ns: tuple[int, ...] = (5,),
 ) -> str:
     ns = sorted(set(top_ns) | set(dup_ns))
-    toks = _toks_sql(text_col)
+    toks = word_tokens_sql(text_col)
     gram_lists = " || ".join(
         f"list_transform({word_shingles_sql('toks', n)}, g -> {{'n': {n}, 'gram': g}})" for n in ns
     )
@@ -324,58 +261,50 @@ def gopher_line_stats_sql(rel: str, id_col: str = "doc_id", text_col: str = "tex
 
 
 # ------------------------------------------------------------- word rules
-def gopher_word_rules(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_words: int = 5,
-    max_words: int = 100_000,
-    min_mean_word_len: float = 3.0,
-    max_mean_word_len: float = 10.0,
-    max_symbol_word_ratio: float = 0.1,
-    min_alpha_word_frac: float = 0.8,
-) -> DataFrame:
-    """Gopher word-level quality gates as pure map-side expressions:
-    word count bounds, mean word length bounds, symbol-to-word ratio
-    ('#' and '...' occurrences per word), fraction of words containing an
-    alphabetic character. `keep` ands the gates. Zero shuffle, zero Python;
-    thresholds are parameters (Gopher's corpus defaults assume full web
-    pages — caption-scale callers pass their own)."""
-    text = F.col(text_col)
-    toks = _toks(text)
+def _word_stats(text: Column, toks: Column) -> dict[str, Column]:
+    """The four Gopher word statistics of a document, rounded to 4dp, as
+    expressions over its text and its word_tokens_expr array."""
     words = F.greatest(F.size(toks), F.lit(1))
     sum_len = F.aggregate(toks, F.lit(0).cast("long"), lambda a, t: a + F.length(t))
     hashes = F.length(text) - F.length(F.replace(text, F.lit("#"), F.lit("")))
     ellipses = F.floor((F.length(text) - F.length(F.replace(text, F.lit("..."), F.lit("")))) / 3)
     alpha = F.size(F.filter(toks, lambda t: t.rlike("[a-z]")))
-    out = df.select(
-        id_col,
-        F.size(toks).cast("long").alias("word_count"),
-        F.round(sum_len / words, 4).alias("mean_word_len"),
-        F.round((hashes + ellipses) / words, 4).alias("symbol_word_ratio"),
-        F.round(alpha / words, 4).alias("alpha_word_frac"),
+    return {
+        "word_count": F.size(toks).cast("long"),
+        "mean_word_len": F.round(sum_len / words, 4),
+        "symbol_word_ratio": F.round((hashes + ellipses) / words, 4),
+        "alpha_word_frac": F.round(alpha / words, 4),
+    }
+
+
+def _word_keep(stats: dict[str, Column], min_words: int) -> Column:
+    """The Gopher word gates over _word_stats' values (or columns holding
+    them): the fused and standalone verdicts compare the same rounded
+    values, so they cannot diverge."""
+    return (
+        stats["word_count"].between(min_words, MAX_WORDS)
+        & stats["mean_word_len"].between(MIN_MEAN_WORD_LEN, MAX_MEAN_WORD_LEN)
+        & (stats["symbol_word_ratio"] < MAX_SYMBOL_WORD_RATIO)
+        & (stats["alpha_word_frac"] >= MIN_ALPHA_WORD_FRAC)
     )
-    keep = (
-        F.col("word_count").between(min_words, max_words)
-        & F.col("mean_word_len").between(min_mean_word_len, max_mean_word_len)
-        & (F.col("symbol_word_ratio") < max_symbol_word_ratio)
-        & (F.col("alpha_word_frac") >= min_alpha_word_frac)
-    )
-    return out.withColumn("keep", keep)
+
+
+def gopher_word_rules(
+    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", min_words: int = 5
+) -> DataFrame:
+    """Gopher word-level quality gates as pure map-side expressions:
+    word count bounds, mean word length bounds, symbol-to-word ratio
+    ('#' and '...' occurrences per word), fraction of words containing an
+    alphabetic character. `keep` ands the gates. Zero shuffle, zero Python."""
+    stats = _word_stats(F.col(text_col), word_tokens_expr(text_col))
+    out = df.select(id_col, *(c.alias(name) for name, c in stats.items()))
+    return out.withColumn("keep", _word_keep({name: F.col(name) for name in stats}, min_words))
 
 
 def gopher_word_rules_sql(
-    table: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_words: int = 5,
-    max_words: int = 100_000,
-    min_mean_word_len: float = 3.0,
-    max_mean_word_len: float = 10.0,
-    max_symbol_word_ratio: float = 0.1,
-    min_alpha_word_frac: float = 0.8,
+    table: str, id_col: str = "doc_id", text_col: str = "text", min_words: int = 5
 ) -> str:
-    toks = _toks_sql(text_col)
+    toks = word_tokens_sql(text_col)
     words = f"greatest(len({toks}), 1)"
     sum_len = f"list_sum(list_transform({toks}, t -> length(t)))"
     hashes = f"(length({text_col}) - length(replace({text_col}, '#', '')))"
@@ -386,10 +315,10 @@ def gopher_word_rules_sql(
         f"round(coalesce({sum_len}, 0) / {words}, 4) as mean_word_len, "
         f"round(({hashes} + {ellipses}) / {words}, 4) as symbol_word_ratio, "
         f"round({alpha} / {words}, 4) as alpha_word_frac from {table}) "
-        f"select *, (word_count between {min_words} and {max_words}) "
-        f"and (mean_word_len between {min_mean_word_len} and {max_mean_word_len}) "
-        f"and (symbol_word_ratio < {max_symbol_word_ratio}) "
-        f"and (alpha_word_frac >= {min_alpha_word_frac}) as keep from stats"
+        f"select *, (word_count between {min_words} and {MAX_WORDS}) "
+        f"and (mean_word_len between {MIN_MEAN_WORD_LEN} and {MAX_MEAN_WORD_LEN}) "
+        f"and (symbol_word_ratio < {MAX_SYMBOL_WORD_RATIO}) "
+        f"and (alpha_word_frac >= {MIN_ALPHA_WORD_FRAC}) as keep from stats"
     )
 
 

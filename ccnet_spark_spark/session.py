@@ -227,7 +227,7 @@ def get_spark(
         ("spark.driver.maxResultSize", "4g"),
         ("spark.sql.parquet.compression.codec", "zstd"),
         ("spark.serializer", "org.apache.spark.serializer.KryoSerializer"),
-        ("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false")),
+        ("spark.ui.enabled", "false"),
         # Keep binary image payloads from blowing file-split planning:
         # 128MB splits are the parquet default sweet spot at scale.
         ("spark.sql.files.maxPartitionBytes", "134217728"),

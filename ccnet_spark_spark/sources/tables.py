@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..schema import SIDECAR_SCHEMA
-from ..session import local_frame
+from ..session import iceberg_configured, local_frame
 
 
 def _hashable(dt: T.DataType) -> bool:
@@ -149,12 +149,6 @@ def compact_result(
 
 
 # ---------------------------------------------------------------- Iceberg
-def _iceberg_available() -> bool:
-    from ..session import iceberg_configured
-
-    return iceberg_configured()
-
-
 def iceberg_partition_transforms(
     partition_cols: tuple[str, ...] = ("lang", "bucket"),
     bucket_by: tuple[int, str] | None = (64, "image_id"),
@@ -183,7 +177,7 @@ def write_result_iceberg(
     iceberg-spark-runtime jar + catalog conf (session.get_spark wires the
     'local' hadoop catalog when the jar is present); raises RuntimeError
     otherwise so callers fall back to write_result()."""
-    if not _iceberg_available():
+    if not iceberg_configured():
         raise RuntimeError(
             "Iceberg runtime jar not on classpath; use write_result() (hive-partitioned parquet, same logical contract)"
         )
@@ -192,17 +186,9 @@ def write_result_iceberg(
 
 
 def read_iceberg(spark: SparkSession, table: str = "local.db.pairs_result") -> DataFrame:
-    if not _iceberg_available():
+    if not iceberg_configured():
         raise RuntimeError("Iceberg runtime jar not on classpath")
     return spark.read.table(table)
-
-
-def iceberg_snapshots(spark: SparkSession, table: str = "local.db.pairs_result") -> DataFrame:
-    """Snapshot log — the resume/lineage anchor in the Iceberg deployment
-    (sidecar rows reference snapshot ids instead of directory names)."""
-    if not _iceberg_available():
-        raise RuntimeError("Iceberg runtime jar not on classpath")
-    return spark.read.table(f"{table}.snapshots")
 
 
 def read_all(spark: SparkSession, path: str) -> DataFrame:

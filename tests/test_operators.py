@@ -172,6 +172,53 @@ def test_resize_and_embedding(spark):
     assert all(abs(n - 1.0) < 1e-3 for n in norms)
 
 
+def test_scrub_image_metadata_operator(spark):
+    """Spark-side: payload sha equality vs the pre-plant original, audit
+    counts surface per row, pixels decode identically after scrub."""
+    from ccnet_spark_spark import codecs
+    from ccnet_spark_spark.operators.multimodal import scrub_image_metadata
+    from ccnet_spark_spark.synth import generate_pairs
+
+    base = generate_pairs(spark, 20).select("image_id", "bytes", "fmt")
+    orig = {r["image_id"]: bytes(r["bytes"]) for r in base.collect()}
+
+    def plant(pdf):
+        pdf = pdf.copy()
+        pdf["bytes"] = [
+            bytearray(
+                bytes(b)[: bytes(b).index(b" ")]
+                + b"\n# Created by x\n"
+                + bytes(b)[bytes(b).index(b" ") + 1 :]
+            )
+            for b in pdf["bytes"]
+        ]
+        return pdf
+
+    tagged = base.toPandas().pipe(plant)
+    out = scrub_image_metadata(spark.createDataFrame(tagged, schema=base.schema)).collect()
+    assert len(out) == 20
+    for r in out:
+        assert r["n_meta_removed"] == 1
+        assert bytes(r["bytes"]) == orig[r["image_id"]]
+        assert (
+            codecs.decode(bytes(r["bytes"]), r["fmt"]) == codecs.decode(orig[r["image_id"]], r["fmt"])
+        ).all()
+
+
+def test_scrub_image_metadata_passes_null_payload(spark):
+    """A NULL payload comes back NULL with audit count 0 (the pipeline
+    form's rule) instead of failing the query; the other rows still scrub."""
+    base = generate_pairs(spark, 4).select("image_id", "bytes", "fmt")
+    null_id = base.first()["image_id"]
+    rows = base.withColumn(
+        "bytes", F.when(F.col("image_id") == null_id, F.lit(None)).otherwise(F.col("bytes"))
+    )
+    out = {r["image_id"]: r for r in multimodal.scrub_image_metadata(rows).collect()}
+    assert len(out) == 4
+    assert out[null_id]["bytes"] is None and out[null_id]["n_meta_removed"] == 0
+    assert all(r["bytes"] is not None for k, r in out.items() if k != null_id)
+
+
 def test_decode_unknown_format_raises():
     from ccnet_spark_spark import codecs
 

@@ -97,6 +97,34 @@ class TestGopherWordRules:
         assert out[1]["symbol_word_ratio"] == 0.5  # 2 ellipses / 4 words
 
 
+def test_gopher_gates_fused_matches_standalone(spark):
+    """The fused one-scan gates must agree row-for-row with the standalone
+    word-rule and ngram-stat operators they replace in composed pipelines."""
+    from ccnet_spark_spark.operators import quality_rules as qr
+
+    texts = [
+        ("a", "the quick brown fox jumps over the lazy dog again and again and again"),
+        ("b", "word " * 60),  # heavy repetition -> fails rep gates
+        ("c", "ok"),  # too short -> fails word gate, zero grams
+        ("d", "### ### ### some text with many symbols ### ..."),
+        ("e", "a reasonable sentence with enough distinct words to pass every gate fine"),
+        ("f", ""),  # empty
+    ]
+    docs = spark.createDataFrame(texts, ["doc_id", "text"])
+    fused = {
+        r["doc_id"]: (r["word_keep"], r["keep_rep"])
+        for r in qr.gopher_gates(docs, min_words=5, top_ns=(2, 3), dup_ns=(5,)).collect()
+    }
+    words = {r["doc_id"]: r["keep"] for r in qr.gopher_word_rules(docs, min_words=5).collect()}
+    reps = {
+        r["doc_id"]: r["keep_rep"]
+        for r in qr.gopher_ngram_stats(docs, top_ns=(2, 3), dup_ns=(5,)).collect()
+    }
+    assert set(fused) == set(words) == set(reps)
+    for d in fused:
+        assert fused[d] == (words[d], reps[d]), d
+
+
 class TestC4Filters:
     def test_line_rules(self, spark):
         text = "\n".join(

@@ -205,34 +205,6 @@ def test_passages_empty_and_short_inputs(spark):
     assert stats == {"a": 0, "b": 0}
 
 
-def test_gopher_gates_fused_matches_standalone(spark):
-    """The fused one-scan gates must agree row-for-row with the standalone
-    word-rule and ngram-stat operators they replace in composed pipelines."""
-    from ccnet_spark_spark.operators import quality_rules as qr
-
-    texts = [
-        ("a", "the quick brown fox jumps over the lazy dog again and again and again"),
-        ("b", "word " * 60),  # heavy repetition -> fails rep gates
-        ("c", "ok"),  # too short -> fails word gate, zero grams
-        ("d", "### ### ### some text with many symbols ### ..."),
-        ("e", "a reasonable sentence with enough distinct words to pass every gate fine"),
-        ("f", ""),  # empty
-    ]
-    docs = spark.createDataFrame(texts, ["doc_id", "text"])
-    fused = {
-        r["doc_id"]: (r["word_keep"], r["keep_rep"])
-        for r in qr.gopher_gates(docs, min_words=5, top_ns=(2, 3), dup_ns=(5,)).collect()
-    }
-    words = {r["doc_id"]: r["keep"] for r in qr.gopher_word_rules(docs, min_words=5).collect()}
-    reps = {
-        r["doc_id"]: r["keep_rep"]
-        for r in qr.gopher_ngram_stats(docs, top_ns=(2, 3), dup_ns=(5,)).collect()
-    }
-    assert set(fused) == set(words) == set(reps)
-    for d in fused:
-        assert fused[d] == (words[d], reps[d]), d
-
-
 def test_bpe_trainer_hand_computed(spark):
     """Tiny corpus with known pair statistics: 'ab' x3, 'abc' x2, 'zz' x1.
     Pair counts: (a,b)=5, (b,c)=2, (z,z)=1 -> merge 0 = ab(5); then

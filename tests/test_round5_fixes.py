@@ -667,39 +667,6 @@ def test_strip_metadata_fidelity_and_idempotence():
         codecs.strip_metadata(b"P6 5 7", "ppm")
 
 
-def test_scrub_image_metadata_operator(spark):
-    """Spark-side: payload sha equality vs the pre-plant original, audit
-    counts surface per row, pixels decode identically after scrub."""
-    from ccnet_spark_spark import codecs
-    from ccnet_spark_spark.operators.multimodal import scrub_image_metadata
-    from ccnet_spark_spark.synth import generate_pairs
-
-    base = generate_pairs(spark, 20).select("image_id", "bytes", "fmt")
-    orig = {r["image_id"]: bytes(r["bytes"]) for r in base.collect()}
-
-    def plant(pdf):
-        pdf = pdf.copy()
-        pdf["bytes"] = [
-            bytearray(
-                bytes(b)[: bytes(b).index(b" ")]
-                + b"\n# Created by x\n"
-                + bytes(b)[bytes(b).index(b" ") + 1 :]
-            )
-            for b in pdf["bytes"]
-        ]
-        return pdf
-
-    tagged = base.toPandas().pipe(plant)
-    out = scrub_image_metadata(spark.createDataFrame(tagged, schema=base.schema)).collect()
-    assert len(out) == 20
-    for r in out:
-        assert r["n_meta_removed"] == 1
-        assert bytes(r["bytes"]) == orig[r["image_id"]]
-        assert (
-            codecs.decode(bytes(r["bytes"]), r["fmt"]) == codecs.decode(orig[r["image_id"]], r["fmt"])
-        ).all()
-
-
 def test_pipeline_payload_scrub_stage(spark):
     """Config(payload_scrub=True): every payload goes through the
     metadata strip BEFORE any retention decision — output rows carry the
