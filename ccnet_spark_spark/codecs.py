@@ -86,7 +86,8 @@ def _int_tok(tok: bytes) -> int:
 
 def decode_ppm(data: bytes) -> np.ndarray:
     (magic, w, h, _maxv), off, _ = parse_header(data)
-    assert magic == b"P6", f"not a P6 ppm: {magic!r}"
+    if magic != b"P6":
+        raise ValueError(f"not a P6 ppm: {magic!r}")
     w, h = _int_tok(w), _int_tok(h)
     return np.frombuffer(data[off:], dtype=np.uint8).reshape(h, w, 3)
 
@@ -105,7 +106,8 @@ def strip_metadata(data: bytes, fmt: str) -> tuple[bytes, int]:
         )
     (magic, w, h, last), off, n_comments = parse_header(data)
     expect = b"P6" if fmt == "ppm" else b"QJ"
-    assert magic == expect, f"fmt={fmt!r} but magic={magic!r}"
+    if magic != expect:
+        raise ValueError(f"fmt={fmt!r} but magic={magic!r}")
     return b"%s %d %d %d\n" % (magic, _int_tok(w), _int_tok(h), _int_tok(last)) + data[off:], n_comments
 
 
@@ -117,7 +119,8 @@ def encode_qjpg(pixels: np.ndarray, step: int = QJPG_STEP) -> bytes:
 
 def decode_qjpg(data: bytes) -> np.ndarray:
     (magic, w, h, step), off, _ = parse_header(data)
-    assert magic == b"QJ", f"not a qjpg: {magic!r}"
+    if magic != b"QJ":
+        raise ValueError(f"not a qjpg: {magic!r}")
     w, h, step = _int_tok(w), _int_tok(h), _int_tok(step)
     q = np.frombuffer(data[off:], dtype=np.uint8).reshape(h, w, 3)
     return np.clip(q.astype(np.int32) * step + step // 2, 0, 255).astype(np.uint8)

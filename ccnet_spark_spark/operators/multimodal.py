@@ -7,6 +7,14 @@ as Arrow-batched mapInPandas so each task decodes its partition's images
 vectorized, with the sandbox codecs (ppm/qjpg); real jpeg/png decode slots
 in behind codecs.decode when Pillow is available (NotImplementedError
 otherwise — plumbing, schema and batch shape are real and tested).
+
+One payload rule for every image, audio and video operator, kept once in
+`_per_payload`: a NULL payload gives NULL outputs for its row, keeping the
+id (the passthrough forms fail closed instead: the scrub gives NULL bytes
+with count 0, the model gates false/false, validate and quarantine
+`bad_header`; frame_sample emits no frames), and a corrupt payload raises
+a ValueError whose message starts with the row's id, e.g.
+`image_id='img…': truncated image header`.
 """
 
 from __future__ import annotations
@@ -18,6 +26,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .. import codecs
 
@@ -25,6 +34,41 @@ STATS_SCHEMA = (
     "image_id string, w int, h int, fmt string, mean_r double, mean_g double, "
     "mean_b double, brightness double, phash_check long"
 )
+
+
+def _per_payload(pdf: pd.DataFrame, fn, *cols: str, id_col: str = "image_id") -> list:
+    """fn(payload bytes, *row values of cols) for every row of one Arrow
+    batch, in row order, under the module's payload rule: a NULL payload
+    gives None, and a ValueError from fn is re-raised with the row's id."""
+    out = []
+    for row_id, data, *vals in zip(pdf[id_col], pdf["bytes"], *(pdf[c] for c in cols)):
+        if data is None:
+            out.append(None)
+            continue
+        try:
+            out.append(fn(bytes(data), *vals))
+        except ValueError as e:
+            raise ValueError(f"{id_col}={row_id!r}: {e}") from e
+    return out
+
+
+def _narrow(df: DataFrame, fn, schema: str, *cols: str, id_col: str = "image_id") -> DataFrame:
+    """The narrow operator form: one mapInPandas over (id, bytes, *cols)
+    emitting (id, outputs...) per row, where fn returns the outputs after
+    the id in schema order and a NULL payload gives all-NULL outputs.
+    Batches are built with dtype=object: with one NULL row pandas would
+    otherwise infer float64 for an int column, and a long such as
+    phash_check would come back with its low bits lost."""
+    names = StructType.fromDDL(schema).names
+    nulls = (None,) * (len(names) - 1)
+
+    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            outs = _per_payload(pdf, fn, *cols, id_col=id_col)
+            rows = [(row_id, *(nulls if o is None else o)) for row_id, o in zip(pdf[id_col], outs)]
+            yield pd.DataFrame(rows, columns=names, dtype=object)
+
+    return df.select(id_col, "bytes", *cols).mapInPandas(op, schema=schema)
 
 
 def _ahash(pixels: np.ndarray) -> int:
@@ -41,28 +85,12 @@ def image_stats(df: DataFrame) -> DataFrame:
     phash_check must equal the stored phash column (payload-fidelity probe
     usable in-flight at any pipeline stage)."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for img_id, data, fmt in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                px = codecs.decode(bytes(data), fmt)
-                means = px.reshape(-1, 3).mean(axis=0)
-                rows.append(
-                    {
-                        "image_id": img_id,
-                        "w": px.shape[1],
-                        "h": px.shape[0],
-                        "fmt": fmt,
-                        "mean_r": float(means[0]),
-                        "mean_g": float(means[1]),
-                        "mean_b": float(means[2]),
-                        "brightness": float(means.mean()),
-                        "phash_check": _ahash(px),
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def row(data, fmt):
+        px = codecs.decode(data, fmt)
+        means = px.reshape(-1, 3).mean(axis=0)
+        return (px.shape[1], px.shape[0], fmt, *map(float, means), float(means.mean()), _ahash(px))
 
-    return df.select("image_id", "bytes", "fmt").mapInPandas(op, schema=STATS_SCHEMA)
+    return _narrow(df, row, STATS_SCHEMA, "fmt")
 
 
 def scrub_image_metadata(df: DataFrame) -> DataFrame:
@@ -85,28 +113,15 @@ def scrub_metadata_passthrough(pairs: DataFrame) -> DataFrame:
     along) and appends the n_meta_removed audit count — zero shuffle, the
     payload crosses Arrow once (the same cost class as the fused model
     gates; at 10^12 rows this is local memory bandwidth, not network).
-    NULL payloads pass through untouched with count 0 (the metadata gates
-    own them)."""
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    schema = StructType(
-        list(pairs.schema.fields) + [StructField("n_meta_removed", IntegerType())]
-    )
+    NULL payloads stay NULL with count 0 (the metadata gates own them)."""
+    schema = StructType([*pairs.schema, *StructType.fromDDL("n_meta_removed int")])
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            cleaned, counts = [], []
-            for data, fmt in zip(pdf["bytes"], pdf["fmt"]):
-                if data is None:
-                    cleaned.append(None)
-                    counts.append(0)
-                    continue
-                clean, n = codecs.strip_metadata(bytes(data), fmt)
-                cleaned.append(bytearray(clean))
-                counts.append(n)
+            scrubbed = _per_payload(pdf, codecs.strip_metadata, "fmt")
             out = pdf.copy()
-            out["bytes"] = cleaned
-            out["n_meta_removed"] = counts
+            out["bytes"] = [None if s is None else s[0] for s in scrubbed]
+            out["n_meta_removed"] = [0 if s is None else s[1] for s in scrubbed]
             yield out
 
     return pairs.mapInPandas(op, schema=schema)
@@ -136,38 +151,17 @@ def resize_to(
     re-implementation is bit-exact. Rows with NULL targets
     (bad dims upstream) are dropped — they have no bucket to train in."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for img_id, data, fmt, tw, th in zip(
-                pdf["image_id"], pdf["bytes"], pdf["fmt"], pdf["_tw"], pdf["_th"]
-            ):
-                px = codecs.decode(bytes(data), fmt)
-                tw, th = int(tw), int(th)
-                ys = (np.arange(th) * px.shape[0] // th).clip(0, px.shape[0] - 1)
-                xs = (np.arange(tw) * px.shape[1] // tw).clip(0, px.shape[1] - 1)
-                out = px[np.ix_(ys, xs)]
-                rows.append(
-                    {
-                        "image_id": img_id,
-                        "bytes": bytearray(codecs.encode_ppm(out)),
-                        "w": tw,
-                        "h": th,
-                        "fmt": "ppm",
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["image_id", "bytes", "w", "h", "fmt"])
+    def row(data, fmt, tw, th):
+        px = codecs.decode(data, fmt)
+        tw, th = int(tw), int(th)
+        ys = (np.arange(th) * px.shape[0] // th).clip(0, px.shape[0] - 1)
+        xs = (np.arange(tw) * px.shape[1] // tw).clip(0, px.shape[1] - 1)
+        return codecs.encode_ppm(px[np.ix_(ys, xs)]), tw, th, "ppm"
 
-    src = df.where(
-        F.col(target_w_col).isNotNull() & F.col(target_h_col).isNotNull()
-    ).select(
-        "image_id",
-        "bytes",
-        "fmt",
-        F.col(target_w_col).cast("int").alias("_tw"),
-        F.col(target_h_col).cast("int").alias("_th"),
-    )
-    return src.mapInPandas(op, schema=RESIZE_SCHEMA)
+    tw, th = F.col(target_w_col), F.col(target_h_col)
+    src = df.where(tw.isNotNull() & th.isNotNull())
+    src = src.withColumns({"_tw": tw.cast("int"), "_th": th.cast("int")})
+    return _narrow(src, row, RESIZE_SCHEMA, "fmt", "_tw", "_th")
 
 
 EMBED_SCHEMA = "image_id string, embedding array<float>"
@@ -202,27 +196,16 @@ def image_entropy(df: DataFrame, flat_threshold: float = 1.0) -> DataFrame:
     fixture uses. `flat` = entropy < flat_threshold (1 bit default: fires
     on solid + near-solid, never on natural noise)."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for img_id, data, fmt in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                px = codecs.decode(bytes(data), fmt).astype(np.int64)
-                gray = (px[:, :, 0] + px[:, :, 1] + px[:, :, 2]) // 3
-                cnt = np.bincount(gray.reshape(-1), minlength=256)
-                nz = cnt[cnt > 0]
-                p = nz / nz.sum()
-                ent = float(-(p * np.log2(p)).sum())
-                rows.append(
-                    {
-                        "image_id": img_id,
-                        "entropy": ent,
-                        "n_gray": int((cnt > 0).sum()),
-                        "flat": bool(ent < flat_threshold),
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def row(data, fmt):
+        px = codecs.decode(data, fmt).astype(np.int64)
+        gray = (px[:, :, 0] + px[:, :, 1] + px[:, :, 2]) // 3
+        cnt = np.bincount(gray.reshape(-1), minlength=256)
+        nz = cnt[cnt > 0]
+        p = nz / nz.sum()
+        ent = float(-(p * np.log2(p)).sum())
+        return ent, int((cnt > 0).sum()), bool(ent < flat_threshold)
 
-    return df.select("image_id", "bytes", "fmt").mapInPandas(op, schema=ENTROPY_SCHEMA)
+    return _narrow(df, row, ENTROPY_SCHEMA, "fmt")
 
 
 def image_embedding(df: DataFrame, dim: int = 64) -> DataFrame:
@@ -230,16 +213,10 @@ def image_embedding(df: DataFrame, dim: int = 64) -> DataFrame:
     flatten -> L2-normalize (a real CLIP/ViT encoder would slot in here;
     the libs are not in this container — Spark-side plumbing is identical)."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for img_id, data, fmt in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                rows.append(
-                    {"image_id": img_id, "embedding": _image_vec(bytes(data), fmt, dim).tolist()}
-                )
-            yield pd.DataFrame(rows)
+    def row(data, fmt):
+        return (_image_vec(data, fmt, dim).tolist(),)
 
-    return df.select("image_id", "bytes", "fmt").mapInPandas(op, schema=EMBED_SCHEMA)
+    return _narrow(df, row, EMBED_SCHEMA, "fmt")
 
 
 def caption_embedding(df: DataFrame, dim: int = 64, text_col: str = "caption") -> DataFrame:
@@ -253,10 +230,8 @@ def caption_embedding(df: DataFrame, dim: int = 64, text_col: str = "caption") -
       float32. A real CLIP text tower slots in behind the same signature."""
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = []
-            for img_id, caption in zip(pdf["image_id"], pdf[text_col]):
-                rows.append({"image_id": img_id, "embedding": _caption_vec(caption, dim).tolist()})
-            yield pd.DataFrame(rows)
+            vecs = [_caption_vec(caption, dim).tolist() for caption in pdf[text_col]]
+            yield pd.DataFrame({"image_id": pdf["image_id"], "embedding": vecs})
 
     return df.select("image_id", text_col).mapInPandas(op, schema=EMBED_SCHEMA)
 
@@ -361,9 +336,8 @@ def model_gate_passthrough(
     never shuffles ANY column at any consumer: its cost is one extra
     Arrow crossing of the payload, local memory bandwidth instead of
     network. Rows the decoder cannot score (NULL payload) fail closed on
-    model_keep, matching model_score_gates' NULL policy."""
-    from pyspark.sql.types import BooleanType, StructField, StructType
-
+    both verdicts, matching model_score_gates' NULL policy and the join
+    form's coalesce on alignment."""
     from .model_heads import (
         AESTHETIC_SEED,
         AESTHETIC_THRESHOLD,
@@ -374,29 +348,25 @@ def model_gate_passthrough(
 
     w_aes = np.array(head_weights(dim, AESTHETIC_SEED), dtype=np.float64)
     w_nsfw = np.array(head_weights(dim, NSFW_SEED), dtype=np.float64)
-    schema = StructType(
-        list(pairs.schema.fields)
-        + [StructField("model_keep", BooleanType()), StructField("aligned", BooleanType())]
-    )
+    schema = StructType([*pairs.schema, *StructType.fromDDL("model_keep boolean, aligned boolean")])
+
+    def row(data, fmt, caption):
+        iv = _image_vec(data, fmt, dim).astype(np.float64)
+        aes = round(float(iv @ w_aes), 4)
+        nsfw = round(float(iv @ w_nsfw), 4)
+        cv = _caption_vec(caption, dim).astype(np.float64)
+        denom = float(np.sqrt(iv @ iv) * np.sqrt(cv @ cv))
+        return (
+            aes >= AESTHETIC_THRESHOLD and nsfw < NSFW_THRESHOLD,
+            denom != 0 and round(float(iv @ cv) / denom, 4) >= tau,
+        )
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            keeps, aligns = [], []
-            for data, fmt, caption in zip(pdf["bytes"], pdf["fmt"], pdf[text_col]):
-                if data is None:
-                    keeps.append(False)
-                    aligns.append(False)
-                    continue
-                iv = _image_vec(bytes(data), fmt, dim).astype(np.float64)
-                aes = round(float(iv @ w_aes), 4)
-                nsfw = round(float(iv @ w_nsfw), 4)
-                keeps.append(aes >= AESTHETIC_THRESHOLD and nsfw < NSFW_THRESHOLD)
-                cv = _caption_vec(caption, dim).astype(np.float64)
-                denom = float(np.sqrt(iv @ iv) * np.sqrt(cv @ cv))
-                aligns.append(denom != 0 and round(float(iv @ cv) / denom, 4) >= tau)
+            verdicts = _per_payload(pdf, row, "fmt", text_col)
             out = pdf.copy()
-            out["model_keep"] = keeps
-            out["aligned"] = aligns
+            out["model_keep"] = [v is not None and v[0] for v in verdicts]
+            out["aligned"] = [v is not None and v[1] for v in verdicts]
             yield out
 
     return pairs.mapInPandas(op, schema=schema)
@@ -414,32 +384,33 @@ def frame_sample(df: DataFrame, every_k: int = 2) -> DataFrame:
     never per row) — the pattern a real codec slots into: swap the ppm
     walker for an mp4 demuxer behind the same signature. Scale notes as for
     image ops: narrow projection first, one Arrow crossing, output is
-    per-frame rows ready for the image operators (stats/resize/embed)."""
+    per-frame rows ready for the image operators (stats/resize/embed). A
+    frame whose header or raster is cut short raises, never emits a short
+    frame."""
+
+    def frames(data):
+        out, pos, idx = [], 0, 0
+        while pos < len(data):
+            nl = data.index(b"\n", pos)
+            magic, w, h, _maxv = data[pos:nl].split()
+            if magic != b"P6":
+                raise ValueError(f"bad frame header at byte {pos}")
+            w, h = int(w), int(h)
+            end = nl + 1 + w * h * 3
+            if end > len(data):
+                raise ValueError(f"frame {idx} at byte {pos} is truncated")
+            if idx % every_k == 0:
+                out.append((idx, data[pos:end], w, h))
+            pos, idx = end, idx + 1
+        return out
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = []
-            for vid, data in zip(pdf["video_id"], pdf["bytes"]):
-                data = bytes(data)
-                pos, idx = 0, 0
-                while pos < len(data):
-                    nl = data.index(b"\n", pos)
-                    magic, w, h, _maxv = data[pos:nl].split()
-                    assert magic == b"P6", f"bad frame header at {pos} in {vid}"
-                    w, h = int(w), int(h)
-                    end = nl + 1 + w * h * 3
-                    if idx % every_k == 0:
-                        rows.append(
-                            {
-                                "video_id": vid,
-                                "frame_idx": idx,
-                                "frame_bytes": data[pos:end],
-                                "w": w,
-                                "h": h,
-                            }
-                        )
-                    pos, idx = end, idx + 1
-            yield pd.DataFrame(rows, columns=["video_id", "frame_idx", "frame_bytes", "w", "h"])
+            per_video = _per_payload(pdf, frames, id_col="video_id")
+            rows = [(vid, *f) for vid, fs in zip(pdf["video_id"], per_video) for f in fs or ()]
+            yield pd.DataFrame(
+                rows, columns=["video_id", "frame_idx", "frame_bytes", "w", "h"], dtype=object
+            )
 
     return df.select("video_id", "bytes").mapInPandas(op, schema=FRAME_SCHEMA)
 
@@ -456,30 +427,18 @@ def audio_stats(df: DataFrame) -> DataFrame:
     formats (mp3/flac) would decode behind the same signature (soundfile /
     ffmpeg gates, absent in this container — the PCM math IS real)."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def row(data, rate):
+        pcm = np.frombuffer(data, dtype="<i2")
+        return (
+            len(pcm),
+            int(len(pcm) * 1000 // int(rate)),
+            # empty payload -> 0.0, not NaN (np.mean([]) warns+NaNs)
+            round(float(np.sqrt(np.mean(pcm.astype(np.float64) ** 2))), 4) if len(pcm) else 0.0,
+            # widen first: abs(-32768) overflows int16 and would drop a full-scale negative peak
+            int(np.abs(pcm.astype(np.int32)).max()) if len(pcm) else 0,
+        )
 
-        for pdf in batches:
-            rows = []
-            for aid, data, rate in zip(pdf["audio_id"], pdf["bytes"], pdf["sample_rate"]):
-                pcm = np.frombuffer(bytes(data), dtype="<i2")
-                rows.append(
-                    {
-                        "audio_id": aid,
-                        "n_samples": len(pcm),
-                        "duration_ms": int(len(pcm) * 1000 // int(rate)),
-                        # empty payload -> 0.0, not NaN (np.mean([]) warns+NaNs)
-                        "rms": round(float(np.sqrt(np.mean(pcm.astype(np.float64) ** 2))), 4)
-                        if len(pcm)
-                        else 0.0,
-                        "peak": int(np.abs(pcm).max()) if len(pcm) else 0,
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=["audio_id", "n_samples", "duration_ms", "rms", "peak"]
-            )
-
-    return df.select("audio_id", "bytes", "sample_rate").mapInPandas(op, schema=AUDIO_STATS_SCHEMA)
+    return _narrow(df, row, AUDIO_STATS_SCHEMA, "sample_rate", id_col="audio_id")
 
 
 # --------------------------------------------------- ingestion quarantine
@@ -550,16 +509,12 @@ def validate_payloads(df: DataFrame) -> DataFrame:
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = []
-            for img_id, data, fmt, w, h in zip(
-                pdf["image_id"], pdf["bytes"], pdf["fmt"], pdf["w"], pdf["h"]
-            ):
-                payload = bytes(data) if isinstance(data, (bytes, bytearray)) else b""
-                reason = classify_payload(payload, fmt, w, h)
-                rows.append(
-                    {"image_id": img_id, "fmt": fmt, "ok": reason == "ok", "reason": reason}
-                )
-            yield pd.DataFrame(rows, columns=["image_id", "fmt", "ok", "reason"])
+            reasons = _per_payload(pdf, classify_payload, "fmt", "w", "h")
+            reasons = [r or "bad_header" for r in reasons]  # a NULL payload has no header
+            ok = [r == "ok" for r in reasons]
+            yield pd.DataFrame(
+                {"image_id": pdf["image_id"], "fmt": pdf["fmt"], "ok": ok, "reason": reasons}
+            )
 
     return df.select("image_id", "bytes", "fmt", "w", "h").mapInPandas(
         op, schema=QUARANTINE_SCHEMA
@@ -580,20 +535,14 @@ def quarantine_passthrough(pairs: DataFrame) -> DataFrame:
     for operator review) use validate_payloads and write its verdict
     frame partitioned by reason."""
     cols = list(pairs.columns)
-    for c in ("bytes", "fmt", "w", "h"):
+    for c in ("image_id", "bytes", "fmt", "w", "h"):
         if c not in cols:
             raise ValueError(f"quarantine requires the pair column {c!r}")
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            mask = [
-                classify_payload(
-                    bytes(b) if isinstance(b, (bytes, bytearray)) else b"", f, w, h
-                )
-                == "ok"
-                for b, f, w, h in zip(pdf["bytes"], pdf["fmt"], pdf["w"], pdf["h"])
-            ]
-            out = pdf[pd.Series(mask, index=pdf.index)]
+            ok = [r == "ok" for r in _per_payload(pdf, classify_payload, "fmt", "w", "h")]
+            out = pdf[pd.Series(ok, index=pdf.index)]
             if len(out):
                 yield out
 

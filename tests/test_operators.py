@@ -1,5 +1,6 @@
 """Operator-level unit tests: near-dup detection on planted duplicates,
-ANN vs a numpy oracle, multimodal plumbing, normalizer edge cases."""
+ANN vs a numpy oracle, normalizer edge cases. The multimodal operators
+are tested in test_multimodal.py."""
 
 import numpy as np
 import pandas as pd
@@ -8,8 +9,7 @@ import pytest
 
 from ccnet_spark_spark.functions.normalize import normalize_for_dedup_expr, normalize_for_dedup_py
 from ccnet_spark_spark.functions.scrub import scrub_py
-from ccnet_spark_spark.operators import dedup, multimodal, similarity
-from ccnet_spark_spark.synth import generate_pairs
+from ccnet_spark_spark.operators import dedup, similarity
 
 TRICKY = [
     "Hello, World! 123",
@@ -148,75 +148,6 @@ def test_embedding_near_dup(spark):
     df = spark.createDataFrame([(i, v.tolist()) for i, v in enumerate(base)], ["vec_id", "embedding"])
     pairs = similarity.embedding_near_dup(df, threshold=0.99, n_planes=4, dim=16).collect()
     assert any(r["id_a"] == 3 and r["id_b"] == 7 for r in pairs)
-
-
-def test_image_stats_phash_roundtrip(spark):
-    pairs = generate_pairs(spark, 60)
-    stats = multimodal.image_stats(pairs).select("image_id", "fmt", "phash_check", "w", "h")
-    pdf = stats.join(pairs.select("image_id", "phash"), "image_id").toPandas()
-    assert len(pdf) == 60
-    # lossless rows: recomputed average-hash must equal stored phash
-    ppm = pdf[pdf.fmt == "ppm"]
-    assert len(ppm) > 0
-    assert (ppm["phash_check"] == ppm["phash"]).all()
-    assert pdf["w"].notna().all() and pdf["h"].notna().all()
-
-
-def test_resize_and_embedding(spark):
-    pairs = generate_pairs(spark, 30)
-    small = multimodal.resize(pairs, target=8).toPandas()
-    assert (small["w"] == 8).all() and (small["h"] == 8).all()
-    emb = multimodal.image_embedding(pairs, dim=64).toPandas()
-    assert all(len(e) == 64 for e in emb["embedding"])
-    norms = [float(np.linalg.norm(np.array(e))) for e in emb["embedding"]]
-    assert all(abs(n - 1.0) < 1e-3 for n in norms)
-
-
-def test_scrub_image_metadata_operator(spark):
-    """Spark-side: payload sha equality vs the pre-plant original, audit
-    counts surface per row, pixels decode identically after scrub."""
-    from ccnet_spark_spark import codecs
-    from ccnet_spark_spark.operators.multimodal import scrub_image_metadata
-    from ccnet_spark_spark.synth import generate_pairs
-
-    base = generate_pairs(spark, 20).select("image_id", "bytes", "fmt")
-    orig = {r["image_id"]: bytes(r["bytes"]) for r in base.collect()}
-
-    def plant(pdf):
-        pdf = pdf.copy()
-        pdf["bytes"] = [
-            bytearray(
-                bytes(b)[: bytes(b).index(b" ")]
-                + b"\n# Created by x\n"
-                + bytes(b)[bytes(b).index(b" ") + 1 :]
-            )
-            for b in pdf["bytes"]
-        ]
-        return pdf
-
-    tagged = base.toPandas().pipe(plant)
-    out = scrub_image_metadata(spark.createDataFrame(tagged, schema=base.schema)).collect()
-    assert len(out) == 20
-    for r in out:
-        assert r["n_meta_removed"] == 1
-        assert bytes(r["bytes"]) == orig[r["image_id"]]
-        assert (
-            codecs.decode(bytes(r["bytes"]), r["fmt"]) == codecs.decode(orig[r["image_id"]], r["fmt"])
-        ).all()
-
-
-def test_scrub_image_metadata_passes_null_payload(spark):
-    """A NULL payload comes back NULL with audit count 0 (the pipeline
-    form's rule) instead of failing the query; the other rows still scrub."""
-    base = generate_pairs(spark, 4).select("image_id", "bytes", "fmt")
-    null_id = base.first()["image_id"]
-    rows = base.withColumn(
-        "bytes", F.when(F.col("image_id") == null_id, F.lit(None)).otherwise(F.col("bytes"))
-    )
-    out = {r["image_id"]: r for r in multimodal.scrub_image_metadata(rows).collect()}
-    assert len(out) == 4
-    assert out[null_id]["bytes"] is None and out[null_id]["n_meta_removed"] == 0
-    assert all(r["bytes"] is not None for k, r in out.items() if k != null_id)
 
 
 def test_decode_unknown_format_raises():

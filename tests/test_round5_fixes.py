@@ -422,20 +422,6 @@ def test_fused_model_gates_equal_join_form(spark):
     assert ra == rb
 
 
-def test_fused_gate_null_payload_fails_closed(spark):
-    from pyspark.sql import functions as F
-
-    from ccnet_spark_spark.operators.multimodal import model_gate_passthrough
-    from ccnet_spark_spark.synth import generate_pairs
-
-    pairs = generate_pairs(spark, 3).withColumn(
-        "bytes", F.when(F.col("image_id") != "img0000000000", F.col("bytes"))
-    )
-    out = {r["image_id"]: r for r in model_gate_passthrough(pairs).collect()}
-    assert out["img0000000000"]["model_keep"] is False
-    assert out["img0000000000"]["aligned"] is False
-
-
 def test_model_gates_mode_validated(spark):
     import pytest as _pytest
 
