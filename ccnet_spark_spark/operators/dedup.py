@@ -702,7 +702,8 @@ def bloom_might_contain(df: DataFrame, hv_col: str, words: list[int], k: int = 5
 
     # a reuse loop (one snapshot, many batches) should broadcast the words
     # ONCE and pass the handle — re-broadcasting a 32 MiB array per batch
-    # is measurable overhead (tools/bench_bloom.py)
+    # is measurable overhead (BENCH.md, "Bloom-prefiltered ingestion
+    # dedup in its winning regime")
     if prebroadcast:
         bc = words
     else:
@@ -779,7 +780,8 @@ def incremental_dedup_bloom(
     words: prebuilt bloom (build_bloom_words) — the production ingestion
     loop builds ONCE per committed snapshot and reuses across batches.
     corpus_hv_col: name of a precomputed hash column on `corpus` (the
-    committed hash SIDECAR, as tools/bench_bloom.py uses) — at scale the
+    committed hash SIDECAR, as measured in BENCH.md "Bloom-prefiltered
+    ingestion dedup in its winning regime") — at scale the
     corpus hash projection is stored, not recomputed from text per batch."""
     batch_h, corpus_h = _hashed_sides(batch, corpus, text_col, hash_algo, corpus_hv_col)
     if words is None:
@@ -787,7 +789,8 @@ def incremental_dedup_bloom(
     probed = bloom_might_contain(batch_h, "_hv", words, k=k)
     # probed feeds THREE plan branches (definitely-new, the sliver, and
     # the sliver's broadcast distinct) — materialize once or the batch
-    # scan + probe run three times per call (measured in bench_bloom)
+    # scan + probe run three times per call (measured: BENCH.md,
+    # "Bloom-prefiltered ingestion dedup in its winning regime")
     probed = probed.localCheckpoint()
     definitely_new = probed.where(~F.col("_bloom_hit")).drop("_bloom_hit")
     maybe = probed.where(F.col("_bloom_hit")).drop("_bloom_hit")

@@ -64,9 +64,9 @@ def salted_repartition(df: DataFrame, num_partitions: int, key_col: str = "lang"
 
     salt_buckets defaults to 16 x num_partitions: with only ~2 x partitions
     salt values, balls-in-bins variance leaves the hottest partition 2x the
-    mean (measured: tools/bench_skew.py, one hot key at local[16] — 32
-    salts 7.2 s vs 256 salts 4.5 s vs 3.5 s skew-free bound; the by-lang
-    unsalted shape is 44.8 s, 7-10x worse)."""
+    mean (measured: SCALE.md "Skew handling: MEASURED (round 3)", one
+    hot key at local[16] — 32 salts 7.2 s vs 256 salts 4.5 s vs 3.5 s
+    skew-free bound; the by-lang unsalted shape is 44.8 s, 7-10x worse)."""
     if salt_buckets is None:
         salt_buckets = max(32, 16 * num_partitions)
     salt_src = [F.col(id_col)] if id_col else [F.col(c) for c in df.columns]

@@ -120,10 +120,19 @@ def assign_shards_sql(
 def _tar_bytes(rows) -> bytes:
     """One deterministic USTAR archive: per sample `<id>.<fmt>` (payload)
     then `<id>.txt` (UTF-8 caption; omitted when NULL), entries in id
-    order, zeroed mtime/uid/gid so re-runs are byte-identical."""
+    order, zeroed mtime/uid/gid so re-runs are byte-identical. A sample
+    without a payload member is one read_webdataset drops, so a NULL
+    payload raises, naming its row, before any tar byte is built."""
+    rows = sorted(rows, key=lambda r: r["image_id"])
+    for r in rows:
+        if r["bytes"] is None:
+            raise ValueError(
+                f"image_id={r['image_id']!r}: NULL payload; a webdataset sample needs one "
+                "(drop such rows first, e.g. with Config.quarantine)"
+            )
     buf = io.BytesIO()
     with tarfile.open(fileobj=buf, mode="w", format=tarfile.USTAR_FORMAT) as tar:
-        for r in sorted(rows, key=lambda r: r["image_id"]):
+        for r in rows:
             payload = bytes(r["bytes"])
             for name, data in ((f"{r['image_id']}.{r['fmt']}", payload),) + (
                 ((f"{r['image_id']}.txt", r["caption"].encode("utf-8")),)

@@ -12,6 +12,7 @@ that names the row's id, or is classified (validate) or dropped
 """
 
 import inspect
+import os
 from dataclasses import dataclass
 from typing import Callable
 
@@ -22,10 +23,12 @@ from pyspark.sql import functions as F
 
 from ccnet_spark_spark import codecs
 from ccnet_spark_spark.operators import multimodal
+from ccnet_spark_spark.operators.multimodal import classify_payload, validate_payloads
 from ccnet_spark_spark.schema import PAIRS_SCHEMA
 from ccnet_spark_spark.synth import (
     AUDIO_RATE,
     AUDIO_SCHEMA,
+    QUARANTINE_KINDS,
     VIDEOS_SCHEMA,
     gen_audio_row,
     gen_pandas,
@@ -292,3 +295,179 @@ def test_fused_gate_null_payload_fails_closed(spark):
     aligned = {r["image_id"]: r["aligned"] for r in multimodal.caption_image_alignment(pairs).collect()}
     assert keep == {i: r["model_keep"] for i, r in out.items()}
     assert aligned == {i: r["aligned"] for i, r in out.items()}
+
+
+def test_classify_payload_reason_ladder():
+    r = gen_pandas(0, 1).iloc[0]
+    data = bytes(r.bytes)
+    assert classify_payload(data, r.fmt, r.w, r.h) == "ok"
+    assert classify_payload(data[:6], r.fmt, r.w, r.h) == "bad_header"
+    assert classify_payload(b"XX" + data[2:], r.fmt, r.w, r.h) == "bad_magic"
+    assert classify_payload(data[:-1], r.fmt, r.w, r.h) == "bad_raster"
+    assert classify_payload(data + b"x", r.fmt, r.w, r.h) == "bad_raster"
+    assert classify_payload(data, r.fmt, r.w + 1, r.h) == "dims_mismatch"
+    assert classify_payload(data, r.fmt, r.w, r.h - 1) == "dims_mismatch"
+    assert classify_payload(data, "png", r.w, r.h) == "unsupported_fmt"
+    assert classify_payload(data, None, r.w, r.h) == "unsupported_fmt"
+    # ladder ORDER: a wrong-magic payload with lying dims reports the
+    # magic first (shared spec with the independent fixture validator)
+    assert classify_payload(b"XX" + data[2:], r.fmt, r.w + 1, r.h) == "bad_magic"
+    # header with a non-integer field is bad_header, not a crash
+    assert classify_payload(b"P6 ab 8 255\n" + b"\0" * 192, "ppm", 8, 8) == "bad_header"
+    # empty payload
+    assert classify_payload(b"", r.fmt, r.w, r.h) == "bad_header"
+
+
+def test_validate_payloads_never_raises_and_matches_kinds(spark):
+    plants = spark.createDataFrame(gen_quarantine_pairs(4), schema=PAIRS_SCHEMA)
+    out = validate_payloads(plants).toPandas().set_index("image_id")
+    for kind in QUARANTINE_KINDS:
+        for i in range(4):
+            row = out.loc[f"img_{kind}_{i:03d}"]
+            expect = "ok" if kind.startswith("ok_") else kind
+            assert row.reason == expect, (kind, i, row.reason)
+            assert bool(row.ok) == (expect == "ok")
+
+
+def test_validate_payloads_plan_no_shuffle(spark):
+    plants = spark.createDataFrame(gen_quarantine_pairs(2), schema=PAIRS_SCHEMA)
+    plan = validate_payloads(plants)._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+
+
+def test_quarantine_fixture_fresh():
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    disk = pd.read_parquet(os.path.join(repo, "fixtures", "payload_quarantine_expected.parquet"))
+    assert len(disk) == 256, "stale fixture — rerun tools/make_fixtures.py"
+    assert int((~disk.ok).sum()) == 32
+    # engine classifier agrees with the independent validator row-for-row
+    src = pd.concat([gen_pandas(0, 200), gen_quarantine_pairs(8)], ignore_index=True)
+    got = [
+        classify_payload(bytes(r.bytes), r.fmt, int(r.w), int(r.h)) for r in src.itertuples()
+    ]
+    assert got == disk.reason.tolist()
+
+
+def test_quarantine_passthrough_filters_and_survives_nulls(spark):
+    from pyspark.sql import Row
+
+    from ccnet_spark_spark.operators.multimodal import quarantine_passthrough
+
+    plants = spark.createDataFrame(gen_quarantine_pairs(4), schema=PAIRS_SCHEMA)
+    nulls = spark.createDataFrame(
+        [
+            Row(image_id="null_bytes", bytes=None, w=8, h=8, fmt="ppm", caption="c", phash=0),
+            Row(
+                image_id="null_dims",
+                bytes=bytearray(gen_pandas(0, 1).iloc[0].bytes),
+                w=None,
+                h=None,
+                fmt=gen_pandas(0, 1).iloc[0].fmt,
+                caption="c",
+                phash=0,
+            ),
+        ],
+        schema=PAIRS_SCHEMA,
+    )
+    out = quarantine_passthrough(plants.unionByName(nulls)).toPandas()
+    # only the spec-valid variants survive (untouched copies + the
+    # comment/multi-whitespace non-canonical headers); NULL payload/dims drop
+    expect = sorted(
+        f"img_{kind}_{i:03d}"
+        for kind in ("ok_copy", "ok_comment", "ok_multispace")
+        for i in range(4)
+    )
+    assert sorted(out.image_id) == expect
+    # schema is unchanged (full-row passthrough)
+    assert list(out.columns) == ["image_id", "bytes", "w", "h", "fmt", "caption", "phash"]
+
+
+def test_quarantine_passthrough_works_on_streams(spark, tmp_path):
+    """Stage-0 quarantine at STREAMING ingest: mapInPandas composes with
+    readStream, so the same operator gates a continuous ingestion job —
+    corrupt payloads drop in-flight, valid rows reach the sink."""
+    src = str(tmp_path / "qstream_src")
+    sink = str(tmp_path / "qstream_sink")
+    ckpt = str(tmp_path / "qstream_ckpt")
+    from ccnet_spark_spark.operators.multimodal import quarantine_passthrough
+
+    plants = spark.createDataFrame(gen_quarantine_pairs(4), schema=PAIRS_SCHEMA)
+    plants.write.parquet(src)
+    stream = spark.readStream.schema(PAIRS_SCHEMA).parquet(src)
+    q = (
+        quarantine_passthrough(stream)
+        .writeStream.outputMode("append")
+        .format("parquet")
+        .option("path", sink)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.processAllAvailable()
+    q.stop()
+    ids = sorted(r.image_id for r in spark.read.parquet(sink).select("image_id").collect())
+    expect = sorted(
+        f"img_{kind}_{i:03d}"
+        for kind in ("ok_copy", "ok_comment", "ok_multispace")
+        for i in range(4)
+    )
+    assert ids == expect
+
+
+def test_fused_model_gates_equal_join_form(spark):
+    """model_gate_passthrough (zero-shuffle fused form) keeps EXACTLY the
+    rows the join form keeps, over the whole 400-pair corpus — the engine-
+    internal pin that lets either form back the curated cascade."""
+    from ccnet_spark_spark.plans.pipeline import Config, Pipeline
+    from ccnet_spark_spark.synth import generate_pairs
+
+    from __spark_entry__ import _cutoffs
+
+    base = generate_pairs(spark, 400)
+    join_cfg = Config(cutoffs=_cutoffs(), image_gates=True, caption_budget=10, model_gates=True)
+    fused_cfg = Config(
+        cutoffs=_cutoffs(),
+        image_gates=True,
+        caption_budget=10,
+        model_gates=True,
+        model_gates_mode="fused",
+    )
+    a = Pipeline(spark, join_cfg).run(base)
+    b = Pipeline(spark, fused_cfg).run(base)
+    cols = [c for c in a.columns if c != "bytes"]
+    ra = sorted(repr(tuple(r)) for r in a.select(*cols).collect())
+    rb = sorted(repr(tuple(r)) for r in b.select(*cols).collect())
+    assert ra == rb
+
+
+def test_strip_metadata_fidelity_and_idempotence():
+    """Plant comments -> decode still works (comment-tolerant parser),
+    scrub restores the EXACT original bytes, decoded pixels bit-identical
+    at every step, scrub is idempotent, counts are right."""
+    import numpy as np
+
+    from ccnet_spark_spark import codecs
+
+    rng = np.random.default_rng(3)
+    px = rng.integers(0, 256, size=(7, 5, 3), dtype=np.uint8)
+    for fmt, enc in (("ppm", codecs.encode_ppm), ("qjpg", codecs.encode_qjpg)):
+        orig = enc(px)
+        sp = orig.index(b" ")
+        tagged = orig[:sp] + b"\n# Created by tool\n# GPS 1.5 2.5\n" + orig[sp + 1 :]
+        # comment-tolerant decode sees the same pixels
+        assert (codecs.decode(tagged, fmt) == codecs.decode(orig, fmt)).all()
+        clean, n = codecs.strip_metadata(tagged, fmt)
+        assert n == 2 and clean == orig
+        again, n2 = codecs.strip_metadata(clean, fmt)
+        assert n2 == 0 and again == clean
+    # glued comment (no whitespace before '#') still terminates the token
+    hdr = b"P6 5#c\n7 255\n" + bytes(5 * 7 * 3)
+    clean, n = codecs.strip_metadata(hdr, "ppm")
+    assert n == 1 and clean.startswith(b"P6 5 7 255\n")
+    # error paths: unknown fmt gated, truncated header loud
+    import pytest as _pytest
+
+    with _pytest.raises(NotImplementedError):
+        codecs.strip_metadata(b"\xff\xd8", "jpeg")
+    with _pytest.raises(ValueError):
+        codecs.strip_metadata(b"P6 5 7", "ppm")

@@ -1,75 +1,21 @@
-"""Round-5 late additions: payload quarantine, self-calibrating alignment
-filter, cluster-balanced diverse sampling.
+"""Round-5 late additions: self-calibrating alignment filter,
+cluster-balanced diverse sampling, epoch shuffling, release pipelines.
 
 The contract queries are value-checked against DuckDB by the oracle
-harness; these tests pin the operator-level semantics (reason ladder,
-quota bound, percentile keep rule) and the plan shapes.
+harness; these tests pin the operator-level semantics (quota bound,
+percentile keep rule) and the plan shapes.
 """
 
 import os
 import sys
 
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from ccnet_spark_spark.operators.multimodal import classify_payload, validate_payloads
 from ccnet_spark_spark.schema import PAIRS_SCHEMA
-from ccnet_spark_spark.synth import QUARANTINE_KINDS, gen_pandas, gen_quarantine_pairs
-
-
-# --------------------------------------------------------- quarantine unit
-def test_classify_payload_reason_ladder():
-    r = gen_pandas(0, 1).iloc[0]
-    data = bytes(r.bytes)
-    assert classify_payload(data, r.fmt, r.w, r.h) == "ok"
-    assert classify_payload(data[:6], r.fmt, r.w, r.h) == "bad_header"
-    assert classify_payload(b"XX" + data[2:], r.fmt, r.w, r.h) == "bad_magic"
-    assert classify_payload(data[:-1], r.fmt, r.w, r.h) == "bad_raster"
-    assert classify_payload(data + b"x", r.fmt, r.w, r.h) == "bad_raster"
-    assert classify_payload(data, r.fmt, r.w + 1, r.h) == "dims_mismatch"
-    assert classify_payload(data, r.fmt, r.w, r.h - 1) == "dims_mismatch"
-    assert classify_payload(data, "png", r.w, r.h) == "unsupported_fmt"
-    assert classify_payload(data, None, r.w, r.h) == "unsupported_fmt"
-    # ladder ORDER: a wrong-magic payload with lying dims reports the
-    # magic first (shared spec with the independent fixture validator)
-    assert classify_payload(b"XX" + data[2:], r.fmt, r.w + 1, r.h) == "bad_magic"
-    # header with a non-integer field is bad_header, not a crash
-    assert classify_payload(b"P6 ab 8 255\n" + b"\0" * 192, "ppm", 8, 8) == "bad_header"
-    # empty payload
-    assert classify_payload(b"", r.fmt, r.w, r.h) == "bad_header"
-
-
-def test_validate_payloads_never_raises_and_matches_kinds(spark):
-    plants = spark.createDataFrame(gen_quarantine_pairs(4), schema=PAIRS_SCHEMA)
-    out = validate_payloads(plants).toPandas().set_index("image_id")
-    for kind in QUARANTINE_KINDS:
-        for i in range(4):
-            row = out.loc[f"img_{kind}_{i:03d}"]
-            expect = "ok" if kind.startswith("ok_") else kind
-            assert row.reason == expect, (kind, i, row.reason)
-            assert bool(row.ok) == (expect == "ok")
-
-
-def test_validate_payloads_plan_no_shuffle(spark):
-    plants = spark.createDataFrame(gen_quarantine_pairs(2), schema=PAIRS_SCHEMA)
-    plan = validate_payloads(plants)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan, plan
-
-
-def test_quarantine_fixture_fresh():
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    disk = pd.read_parquet(os.path.join(repo, "fixtures", "payload_quarantine_expected.parquet"))
-    assert len(disk) == 256, "stale fixture — rerun tools/make_fixtures.py"
-    assert int((~disk.ok).sum()) == 32
-    # engine classifier agrees with the independent validator row-for-row
-    src = pd.concat([gen_pandas(0, 200), gen_quarantine_pairs(8)], ignore_index=True)
-    got = [
-        classify_payload(bytes(r.bytes), r.fmt, int(r.w), int(r.h)) for r in src.itertuples()
-    ]
-    assert got == disk.reason.tolist()
+from ccnet_spark_spark.synth import gen_quarantine_pairs
 
 
 # ------------------------------------------------------- diverse sampling
@@ -129,40 +75,6 @@ def test_alignment_selfcal_keep_rule(spark):
 
 
 # ------------------------------------------------- pipeline quarantine stage
-def test_quarantine_passthrough_filters_and_survives_nulls(spark):
-    from pyspark.sql import Row
-
-    from ccnet_spark_spark.operators.multimodal import quarantine_passthrough
-
-    plants = spark.createDataFrame(gen_quarantine_pairs(4), schema=PAIRS_SCHEMA)
-    nulls = spark.createDataFrame(
-        [
-            Row(image_id="null_bytes", bytes=None, w=8, h=8, fmt="ppm", caption="c", phash=0),
-            Row(
-                image_id="null_dims",
-                bytes=bytearray(gen_pandas(0, 1).iloc[0].bytes),
-                w=None,
-                h=None,
-                fmt=gen_pandas(0, 1).iloc[0].fmt,
-                caption="c",
-                phash=0,
-            ),
-        ],
-        schema=PAIRS_SCHEMA,
-    )
-    out = quarantine_passthrough(plants.unionByName(nulls)).toPandas()
-    # only the spec-valid variants survive (untouched copies + the
-    # comment/multi-whitespace non-canonical headers); NULL payload/dims drop
-    expect = sorted(
-        f"img_{kind}_{i:03d}"
-        for kind in ("ok_copy", "ok_comment", "ok_multispace")
-        for i in range(4)
-    )
-    assert sorted(out.image_id) == expect
-    # schema is unchanged (full-row passthrough)
-    assert list(out.columns) == ["image_id", "bytes", "w", "h", "fmt", "caption", "phash"]
-
-
 def test_pipeline_quarantine_gates_the_scrub(spark):
     """The motivation pin: payload_scrub PARSES headers and must fail on a
     corrupt corpus; quarantine=True in front makes the same corpus run
@@ -230,38 +142,6 @@ def test_late_ops_empty_inputs(spark):
         emb, empty_emb.select("embedding"), threshold=0.3, n_planes=4, dim=64, seed=11
     )
     assert out.count() == n
-
-
-def test_quarantine_passthrough_works_on_streams(spark, tmp_path):
-    """Stage-0 quarantine at STREAMING ingest: mapInPandas composes with
-    readStream, so the same operator gates a continuous ingestion job —
-    corrupt payloads drop in-flight, valid rows reach the sink."""
-    src = str(tmp_path / "qstream_src")
-    sink = str(tmp_path / "qstream_sink")
-    ckpt = str(tmp_path / "qstream_ckpt")
-    from ccnet_spark_spark.operators.multimodal import quarantine_passthrough
-
-    plants = spark.createDataFrame(gen_quarantine_pairs(4), schema=PAIRS_SCHEMA)
-    plants.write.parquet(src)
-    stream = spark.readStream.schema(PAIRS_SCHEMA).parquet(src)
-    q = (
-        quarantine_passthrough(stream)
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    ids = sorted(r.image_id for r in spark.read.parquet(sink).select("image_id").collect())
-    expect = sorted(
-        f"img_{kind}_{i:03d}"
-        for kind in ("ok_copy", "ok_comment", "ok_multispace")
-        for i in range(4)
-    )
-    assert ids == expect
 
 
 # ------------------------------------------------------- epoch shuffling

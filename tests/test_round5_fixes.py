@@ -396,32 +396,6 @@ def test_model_gates_requires_pair_schema(spark):
 # ------------------------------------------- fused model-gate passthrough
 
 
-def test_fused_model_gates_equal_join_form(spark):
-    """model_gate_passthrough (zero-shuffle fused form) keeps EXACTLY the
-    rows the join form keeps, over the whole 400-pair corpus — the engine-
-    internal pin that lets either form back the curated cascade."""
-    from ccnet_spark_spark.plans.pipeline import Config, Pipeline
-    from ccnet_spark_spark.synth import generate_pairs
-
-    from __spark_entry__ import _cutoffs
-
-    base = generate_pairs(spark, 400)
-    join_cfg = Config(cutoffs=_cutoffs(), image_gates=True, caption_budget=10, model_gates=True)
-    fused_cfg = Config(
-        cutoffs=_cutoffs(),
-        image_gates=True,
-        caption_budget=10,
-        model_gates=True,
-        model_gates_mode="fused",
-    )
-    a = Pipeline(spark, join_cfg).run(base)
-    b = Pipeline(spark, fused_cfg).run(base)
-    cols = [c for c in a.columns if c != "bytes"]
-    ra = sorted(repr(tuple(r)) for r in a.select(*cols).collect())
-    rb = sorted(repr(tuple(r)) for r in b.select(*cols).collect())
-    assert ra == rb
-
-
 def test_model_gates_mode_validated(spark):
     import pytest as _pytest
 
@@ -618,39 +592,6 @@ def test_hash64_decontaminate_plan_broadcasts_eval(spark):
 
 
 # ------------------------------------------------- image metadata scrub
-
-
-def test_strip_metadata_fidelity_and_idempotence():
-    """Plant comments -> decode still works (comment-tolerant parser),
-    scrub restores the EXACT original bytes, decoded pixels bit-identical
-    at every step, scrub is idempotent, counts are right."""
-    import numpy as np
-
-    from ccnet_spark_spark import codecs
-
-    rng = np.random.default_rng(3)
-    px = rng.integers(0, 256, size=(7, 5, 3), dtype=np.uint8)
-    for fmt, enc in (("ppm", codecs.encode_ppm), ("qjpg", codecs.encode_qjpg)):
-        orig = enc(px)
-        sp = orig.index(b" ")
-        tagged = orig[:sp] + b"\n# Created by tool\n# GPS 1.5 2.5\n" + orig[sp + 1 :]
-        # comment-tolerant decode sees the same pixels
-        assert (codecs.decode(tagged, fmt) == codecs.decode(orig, fmt)).all()
-        clean, n = codecs.strip_metadata(tagged, fmt)
-        assert n == 2 and clean == orig
-        again, n2 = codecs.strip_metadata(clean, fmt)
-        assert n2 == 0 and again == clean
-    # glued comment (no whitespace before '#') still terminates the token
-    hdr = b"P6 5#c\n7 255\n" + bytes(5 * 7 * 3)
-    clean, n = codecs.strip_metadata(hdr, "ppm")
-    assert n == 1 and clean.startswith(b"P6 5 7 255\n")
-    # error paths: unknown fmt gated, truncated header loud
-    import pytest as _pytest
-
-    with _pytest.raises(NotImplementedError):
-        codecs.strip_metadata(b"\xff\xd8", "jpeg")
-    with _pytest.raises(ValueError):
-        codecs.strip_metadata(b"P6 5 7", "ppm")
 
 
 def test_pipeline_payload_scrub_stage(spark):

@@ -2,6 +2,7 @@
 
 import hashlib
 import os
+import re
 import tarfile
 
 import pytest
@@ -101,6 +102,19 @@ def test_write_webdataset_null_caption_omitted(spark, tmp_path):
     for m in manifest:
         with tarfile.open(m["tar_path"]) as tar:
             assert all(not n.endswith(".txt") for n in tar.getnames())
+
+
+def test_write_webdataset_null_payload_names_row(spark, tmp_path):
+    """A sample without a payload member is not a trainable sample (the
+    reader drops it), so a NULL payload fails the write with an error
+    that names its row instead of an unlabelled TypeError."""
+    pairs = generate_pairs(spark, 4)
+    bad = sorted(r["image_id"] for r in pairs.select("image_id").collect())[1]
+    pairs = pairs.withColumn(
+        "bytes", F.when(F.col("image_id") == bad, F.lit(None).cast("binary")).otherwise(F.col("bytes"))
+    )
+    with pytest.raises(Exception, match=re.escape(f"image_id='{bad}': NULL payload")):
+        write_webdataset(pairs, str(tmp_path / "np"), budget_bytes=1 << 20).collect()
 
 
 def test_read_webdataset_roundtrip(spark, tmp_path):
