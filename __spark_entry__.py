@@ -1732,10 +1732,9 @@ def q_dsir_model(spark, sf_dir):
 def q_dsir_select(spark, sf_dir):
     """DSIR importance resampling end-to-end: score every raw caption as
     Σ_grams [log p_target − log q_raw] (one broadcast equi-join + one
-    DECIMAL-sum groupBy) and keep the top-60 most target-like. The
-    selection here is a global window (contract scale); the 10^12 path is
-    a trained percentile cutoff as a scan predicate (resample_topk
-    docstring). Selected rows are overwhelmingly the teacher's 'en' —
+    DECIMAL-sum groupBy) and keep the top-60 most target-like, ranked by
+    a bucketed prefix count (resample_topk over sample.prefix_sum, no
+    single-task window). Selected rows are overwhelmingly the teacher's 'en' —
     pytest-pinned precision >= 0.9 (tests/test_dsir.py)."""
     target, raw = _dsir_corpora(spark)
     model = dsir_op.train_dsir(target, raw, text_col="caption")
@@ -2104,11 +2103,12 @@ def q_token_budget_select(spark, sf_dir):
     (sample.token_budget_select — the FineWeb-Edu construction: keep the
     best-scored docs until the training-token budget is spent). Greedy
     prefix of (quality_score desc, sha256(id), id) with integer token
-    costs, budget 12,000 (~45% of the sf0.01 corpus, so the boundary-band
-    and partial-sub-bucket machinery all exercise). Spark runs the
-    scale-safe two-level threshold form (no global window); the oracle
-    is the straight global-running-sum greedy — equal because the total
-    order is identical and integer costs compose exactly."""
+    costs, budget 12,000 (~45% of the sf0.01 corpus, so the budget ends
+    inside the order, not at either end). Spark runs one bucketed
+    sample.prefix_sum (range buckets on the score, per-bucket running
+    sums, broadcast offsets — no single-task window); the oracle is the
+    straight global-running-sum greedy — equal because the total order
+    is identical and integer costs compose exactly."""
     docs = _docs(spark, sf_dir).select(
         "doc_id",
         "lang",
@@ -2683,13 +2683,14 @@ def q_shard_assign(spark, sf_dir):
     """WebDataset shard assignment (sources/webdataset.py): pack pairs
     into byte-budget tar shards via a contiguous prefix sum over
     length(bytes) in deterministic id order — the q_pack_sequences shape
-    on the image axis. Runs the SCALE form (substreams=2: per-content-
+    on the image axis. Runs the substreams form (substreams=2: per-content-
     hash-stream prefix sums, shard ids unique via stream-offset
-    arithmetic) so the oracle value-checks the parallel path, not just
-    the serial one. DuckDB twin = the identical window arithmetic over
-    the metadata fixture (n_bytes stands in for length(bytes), as in the
-    image-gates twin). The tar WRITER over this assignment is pytest-
-    verified (roundtrip, byte-identical re-runs) in test_webdataset.py."""
+    arithmetic); the one-stream form (a bucketed sample.prefix_sum) is
+    pytest-pinned in test_webdataset.py and test_sample.py. DuckDB twin =
+    the identical window arithmetic over the metadata fixture (n_bytes
+    stands in for length(bytes), as in the image-gates twin). The tar
+    WRITER over this assignment is pytest-verified (roundtrip,
+    byte-identical re-runs) in test_webdataset.py."""
     from ccnet_spark_spark.sources.webdataset import assign_shards
     from ccnet_spark_spark.synth import generate_pairs
 

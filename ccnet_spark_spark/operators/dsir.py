@@ -20,18 +20,17 @@ Scale: the model is ≤4096 rows — broadcast by construction. Training is
 two explode+groupBy passes (map-side combinable); the two corpus totals
 are bounded driver-side scalars (the nb_lid trainer's discipline — a
 1-row join would be a BroadcastNestedLoopJoin). Scoring is one
-broadcast equi-join + one groupBy. Selection here ranks with a global
-window (fine at contract scale); the 10^12-scale path is the trained
-percentile-cutoff threshold (operators/bucket.train_cutoff_matrix over
-log_w) — a scan predicate, no global sort — noted on resample_topk.
+broadcast equi-join + one groupBy. Selection ranks with the bucketed
+prefix count of operators/sample.prefix_sum (no single-task window).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import hashing
+from .sample import prefix_sum
 
 N_HEX = 3
 N_BUCKETS = 16**N_HEX  # 4096
@@ -114,15 +113,15 @@ def score_dsir(
 
 
 def resample_topk(scored: DataFrame, n: int, id_col: str = "doc_id") -> DataFrame:
-    """Deterministic top-n by (log_w desc, id asc) via one global window —
-    fine at contract scale. At 10^12 rows do NOT global-sort: train a
-    percentile cutoff on log_w (bucket.train_cutoff_matrix) and select
-    with the scan predicate log_w >= cutoff instead."""
-    w = Window.orderBy(F.col("log_w").desc(), F.col(id_col).asc())
+    """Deterministic top-n by (log_w desc, id asc): `rank` is the running
+    row count over that order (sample.prefix_sum — bucketed, no
+    single-task global window), kept while <= n. The narrow scored frame
+    is localCheckpoint'd: prefix_sum reads its input three times."""
+    keys = [F.col("log_w").desc(), F.col(id_col).asc()]
     return (
-        scored.withColumn("rank", F.row_number().over(w))
+        prefix_sum(scored.localCheckpoint(), keys, F.lit(1), "rank")
         .where(F.col("rank") <= n)
-        .select(id_col, "n_grams", "log_w", "rank")
+        .select(id_col, "n_grams", "log_w", F.col("rank").cast("int").alias("rank"))
     )
 
 

@@ -14,13 +14,12 @@ public webdataset spec only.
 Scale notes:
 - Shard ASSIGNMENT is the same contiguous prefix-sum shape as
   `q_pack_sequences`: shard_id = floor(bytes_before / budget) over a
-  deterministic id order, ONE window shuffle, each shard lands within
-  one payload of the budget. A single global ordering serializes the
-  prefix sum through one task, so — like operators/aspect.pack_batches —
-  the scale form splits the corpus into `substreams` content-hash
-  sub-streams (sha256-prefix, engine-portable, retry/cluster invariant)
-  and runs the prefix sum per stream: parallelism = substreams, shard
-  ids globally unique via stream-offset arithmetic.
+  deterministic id order, each shard lands within one payload of the
+  budget. The one global stream is operators/sample.prefix_sum (range
+  buckets of the id order, no single-task window); the `substreams`
+  form — like operators/aspect.pack_batches — runs one prefix sum per
+  content-hash sub-stream (sha256-prefix, engine-portable), shard ids
+  globally unique via stream-offset arithmetic.
 - The WRITE groups by shard_id (one shuffle of the payload bytes — the
   unavoidable one: bytes must co-locate to become a tar) and each group
   writes exactly one tar via applyInPandas. Tar bytes are DETERMINISTIC
@@ -39,6 +38,8 @@ import tarfile
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from ..operators.sample import prefix_sum
 
 # stream-offset stride for globally-unique shard ids in substream mode
 _STREAM_STRIDE = 1 << 40
@@ -60,16 +61,16 @@ def assign_shards(
 ) -> DataFrame:
     """df + shard_id (long) + n_bytes (long): contiguous byte-budget
     packing in deterministic id order. substreams=None = one global
-    stream (exact, serial prefix sum); substreams=S = per-stream prefix
-    sums, shard_id = stream * 2^40 + local shard."""
+    stream (exact, the bucketed operators/sample.prefix_sum); substreams=S
+    = per-stream prefix sums, shard_id = stream * 2^40 + local shard."""
     if budget_bytes <= 0:
         raise ValueError(f"budget_bytes must be positive, got {budget_bytes}")
     size = F.length(F.col(bytes_col)).cast("long").alias("n_bytes")
     out = df.withColumn("n_bytes", size)
     if substreams is None:
-        w = Window.orderBy(id_col).rowsBetween(Window.unboundedPreceding, -1)
-        before = F.coalesce(F.sum("n_bytes").over(w), F.lit(0))
-        return out.withColumn("shard_id", F.floor(before / budget_bytes).cast("long"))
+        out = prefix_sum(out, [id_col], "n_bytes", "_before", inclusive=False)
+        shard = F.floor(F.coalesce(F.col("_before"), F.lit(0)) / budget_bytes).cast("long")
+        return out.withColumn("shard_id", shard).drop("_before")
     if not 0 < substreams <= 256:
         raise ValueError(f"substreams must be in 1..256, got {substreams}")
     w = (

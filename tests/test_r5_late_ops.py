@@ -1,5 +1,5 @@
 """Round-5 late additions: self-calibrating alignment filter,
-cluster-balanced diverse sampling, epoch shuffling, release pipelines.
+cluster-balanced diverse sampling, release pipelines.
 
 The contract queries are value-checked against DuckDB by the oracle
 harness; these tests pin the operator-level semantics (quota bound,
@@ -142,82 +142,6 @@ def test_late_ops_empty_inputs(spark):
         emb, empty_emb.select("embedding"), threshold=0.3, n_planes=4, dim=64, seed=11
     )
     assert out.count() == n
-
-
-# ------------------------------------------------------- epoch shuffling
-def test_epoch_shuffle_permutation_properties(spark):
-    from ccnet_spark_spark.operators import sample
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select("doc_id")
-    n = docs.count()
-    e0 = sample.epoch_shuffle(docs, epoch=0).toPandas()
-    e1 = sample.epoch_shuffle(docs, epoch=1).toPandas()
-    for e in (e0, e1):
-        # complete permutation: every row present, positions contiguous per shard
-        assert len(e) == n and e.doc_id.nunique() == n
-        for _, grp in e.groupby("shard"):
-            assert sorted(grp.pos) == list(range(1, len(grp) + 1))
-    # epochs decorrelate: the global (shard, pos) order genuinely differs
-    o0 = e0.sort_values(["shard", "pos"]).doc_id.tolist()
-    o1 = e1.sort_values(["shard", "pos"]).doc_id.tolist()
-    assert o0 != o1
-    same = sum(a == b for a, b in zip(o0, o1))
-    assert same < n * 0.05, f"{same}/{n} fixed points — epochs not decorrelated"
-    # retry/layout invariance: same epoch, reshuffled input, identical order
-    e0b = sample.epoch_shuffle(docs.repartition(13), epoch=0).toPandas()
-    assert (
-        e0b.sort_values(["shard", "pos"]).doc_id.tolist() == o0
-    ), "order must be content-defined, not partition-defined"
-
-
-# ------------------------------------------------- token-budget selection
-def test_token_budget_select_matches_straight_greedy(spark):
-    import hashlib
-
-    from ccnet_spark_spark.functions import textstats
-    from ccnet_spark_spark.operators import sample
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
-        "doc_id",
-        textstats.quality_score_expr("text").alias("score"),
-        textstats.token_count_expr("text").alias("n_tokens"),
-    )
-    pdf = docs.toPandas()
-    pdf["h"] = [hashlib.sha256(str(i).encode()).hexdigest() for i in pdf.doc_id]
-    ordered = pdf.sort_values(["score", "h", "doc_id"], ascending=[False, True, True])
-
-    def greedy(budget):
-        out, spent = [], 0
-        for r in ordered.itertuples():
-            if spent + r.n_tokens <= budget:
-                spent += r.n_tokens
-                out.append(r.doc_id)
-        # greedy PREFIX: stop at the first row that does not fit
-            else:
-                break
-        return sorted(out)
-
-    total = int(pdf.n_tokens.sum())
-    for budget in (0, 37, 5_000, 12_000, total, total + 10):
-        got = sorted(
-            r.doc_id
-            for r in sample.token_budget_select(
-                docs, budget=budget, score_col="score", cost_col="n_tokens"
-            ).collect()
-        )
-        assert got == greedy(budget), f"budget={budget}"
-        sel = pdf[pdf.doc_id.isin(got)]
-        assert int(sel.n_tokens.sum()) <= budget or budget > total
-
-
-def test_epoch_shuffle_rejects_degenerate_shards(spark):
-    from ccnet_spark_spark.operators import sample
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select("doc_id")
-    with pytest.raises(ValueError, match="shard_chars"):
-        sample.epoch_shuffle(docs, epoch=0, shard_chars=0)
-    with pytest.raises(ValueError, match="clobber"):
-        sample.epoch_shuffle(docs.withColumn("pos", F.lit(1)), epoch=0)
 
 
 # ------------------------------------------------- hard-negative mining

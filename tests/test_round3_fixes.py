@@ -68,21 +68,6 @@ def test_simhash_neardup_plan_is_bucketed_equijoin(spark):
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
 
 
-def test_hash_sample_is_deterministic_and_scan_pushed(spark):
-    from ccnet_spark_spark.operators.sample import hash_sample
-
-    df = spark.range(0, 2000).withColumnRenamed("id", "doc_id")
-    a = {r["doc_id"] for r in hash_sample(df, "doc_id", 26).collect()}
-    b = {r["doc_id"] for r in hash_sample(df, "doc_id", 26).collect()}
-    assert a == b  # content-derived: identical on every run
-    assert 0.06 < len(a) / 2000 < 0.15  # ~26/256 expected rate
-    # monotone: raising the rate only ADDS rows (stable slices grow, never churn)
-    c = {r["doc_id"] for r in hash_sample(df, "doc_id", 64).collect()}
-    assert a <= c
-    plan = hash_sample(df, "doc_id", 26)._jdf.queryExecution().executedPlan().toString()
-    assert "Filter" in plan and "Exchange" not in plan  # rides inside the scan
-
-
 def test_pipeline_on_empty_input(spark):
     """0-row input -> 0-row output with the full engine schema, no crash
     (empty aggregations, empty Arrow batches, empty broadcast sides)."""

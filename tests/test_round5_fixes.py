@@ -408,130 +408,6 @@ def test_model_gates_mode_validated(spark):
         )
 
 
-# ----------------------------------------------------------- group_quota
-
-
-def test_group_quota_caps_and_determinism(spark):
-    """At most `quota` rows per group; exact-quota groups kept whole;
-    selection invariant under repartition (content-defined)."""
-    from ccnet_spark_spark.operators.sample import group_quota
-
-    rows = [(f"d{i:03d}", "big") for i in range(40)]
-    rows += [(f"e{i:03d}", "exact") for i in range(10)]
-    rows += [(f"s{i:03d}", "small") for i in range(4)]
-    df = spark.createDataFrame(rows, "doc_id string, lang string")
-    out = group_quota(df, "lang", 10, id_col="doc_id")
-    got = {}
-    for r in out.collect():
-        got.setdefault(r["lang"], set()).add(r["doc_id"])
-    assert len(got["big"]) == 10
-    assert len(got["exact"]) == 10
-    assert len(got["small"]) == 4
-    again = group_quota(df.repartition(13), "lang", 10, id_col="doc_id")
-    got2 = {}
-    for r in again.collect():
-        got2.setdefault(r["lang"], set()).add(r["doc_id"])
-    assert got == got2
-
-
-def test_group_quota_null_group_capped(spark):
-    """NULL groups are ONE group (null-safe cutoff join), capped like any
-    other — not silently kept whole."""
-    from ccnet_spark_spark.operators.sample import group_quota
-
-    rows = [(f"n{i:03d}", None) for i in range(20)] + [("a1", "en")]
-    df = spark.createDataFrame(rows, "doc_id string, lang string")
-    out = group_quota(df, "lang", 5, id_col="doc_id").collect()
-    nulls = [r for r in out if r["lang"] is None]
-    assert len(nulls) == 5
-    assert [r["doc_id"] for r in out if r["lang"] == "en"] == ["a1"]
-
-
-def test_group_quota_validates(spark):
-    import pytest as _pytest
-
-    from ccnet_spark_spark.operators.sample import group_quota
-    from ccnet_spark_spark.synth import generate_pairs
-
-    with _pytest.raises(ValueError, match="quota"):
-        group_quota(generate_pairs(spark, 2), "fmt", 0)
-
-
-def test_group_quota_cutoff_join_is_broadcast(spark):
-    """The scale contract: the cutoff table broadcasts; the full rows
-    reach the filter without an exchange of their own (the only shuffle
-    in the plan is the narrow window's)."""
-    from ccnet_spark_spark.operators.sample import group_quota
-    from ccnet_spark_spark.synth import generate_pairs
-
-    out = group_quota(generate_pairs(spark, 50), "fmt", 5)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    import re
-
-    shuffles = re.findall(r"Exchange hashpartitioning\(([^,]+)", plan)
-    assert all("__gq_g" in s for s in shuffles), shuffles
-
-
-# -------------------------------------------------------- weighted_repeat
-
-
-def test_weighted_repeat_factors(spark):
-    """Whole factors copy exactly; fractional factors add the extra copy
-    for ~frac of ids; factor 0 drops the stratum; copies carry 1..n."""
-    from ccnet_spark_spark.operators.sample import weighted_repeat
-
-    rows = [(f"a{i:03d}", "two") for i in range(30)]
-    rows += [(f"b{i:03d}", "half") for i in range(64)]
-    rows += [(f"c{i:03d}", "drop") for i in range(10)]
-    df = spark.createDataFrame(rows, "doc_id string, lang string")
-    out = weighted_repeat(
-        df, "lang", {"two": 2.0, "half": 0.5, "drop": 0.0}, id_col="doc_id"
-    ).collect()
-    by = {}
-    for r in out:
-        by.setdefault(r["lang"], []).append(r["copy_idx"])
-    assert len(by["two"]) == 60 and sorted(set(by["two"])) == [1, 2]
-    # ~50% of 64: binomial, bounds generous but meaningful
-    assert 16 <= len(by["half"]) <= 48 and set(by["half"]) == {1}
-    assert "drop" not in by
-
-
-def test_weighted_repeat_deterministic_and_no_shuffle(spark):
-    from ccnet_spark_spark.operators.sample import weighted_repeat
-
-    rows = [(f"d{i:03d}", "en") for i in range(50)]
-    df = spark.createDataFrame(rows, "doc_id string, lang string")
-    a = sorted(
-        (r["doc_id"], r["copy_idx"])
-        for r in weighted_repeat(df, "lang", {"en": 1.5}, id_col="doc_id").collect()
-    )
-    b = sorted(
-        (r["doc_id"], r["copy_idx"])
-        for r in weighted_repeat(
-            df.repartition(7), "lang", {"en": 1.5}, id_col="doc_id"
-        ).collect()
-    )
-    assert a == b
-    plan = (
-        weighted_repeat(df, "lang", {"en": 1.5}, id_col="doc_id")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Exchange hashpartitioning" not in plan  # broadcast + map-side explode only
-
-
-def test_weighted_repeat_validates(spark):
-    import pytest as _pytest
-
-    from ccnet_spark_spark.operators.sample import weighted_repeat
-    from ccnet_spark_spark.synth import generate_pairs
-
-    with _pytest.raises(ValueError, match="factors"):
-        weighted_repeat(generate_pairs(spark, 2), "fmt", {"ppm": -1.0})
-
-
 # ------------------------------------------------- image decontamination
 
 
