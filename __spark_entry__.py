@@ -55,6 +55,7 @@ from ccnet_spark_spark.operators import (
 from ccnet_spark_spark.operators import lm as lm_op
 from ccnet_spark_spark.operators import nb_lid as nb_lid_op
 from ccnet_spark_spark.operators import dsir as dsir_op
+from ccnet_spark_spark.session import materialize
 
 MIN_LEN_DOCS = 280  # documents are shorter than captions; same operator
 
@@ -1213,10 +1214,10 @@ def q_corpus_build(spark, sf_dir):
     )
     # minhash_lsh_dedup consumes `kept` on TWO plan branches (signature
     # build + the left-anti survivor join), so without materialization the
-    # whole chain+gates subtree executes twice. localCheckpoint pins the
+    # whole chain+gates subtree executes twice. materialize pins the
     # gate survivors once — the production-scale equivalent is writing the
     # survivor snapshot to the warehouse before the dedup stage.
-    kept = docs.join(survivors, "doc_id").localCheckpoint()
+    kept = materialize(docs.join(survivors, "doc_id"))
     dd = dedup.minhash_lsh_dedup(kept, "doc_id", "text", num_hashes=8, num_bands=4, shingle_n=3)
     out = sample.stratified_hash_sample(dd, "doc_id", "lang", {"en": 128}, default_256=256)
     return out.select("doc_id", "lang", "bucket")
@@ -1265,7 +1266,7 @@ def q_corpus_build_trim(spark, sf_dir):
         .select("doc_id", "bucket", "dedup_caption")
     )
     # MinHash dedup over the TRIMMED text — the RefinedWeb ordering point
-    kept = corpus.select("doc_id", "lang").join(survivors, "doc_id").localCheckpoint()
+    kept = materialize(corpus.select("doc_id", "lang").join(survivors, "doc_id"))
     dd = dedup.minhash_lsh_dedup(
         kept, "doc_id", "dedup_caption", num_hashes=8, num_bands=4, shingle_n=3
     )
@@ -1492,7 +1493,7 @@ def q_selfcal_bucket(spark, sf_dir):
     # duplicates the Python stage below the pushed filter (guide §4.4) —
     # plan-audited 6 ArrowEvalPython for one logical pass. Materialize the
     # narrow scored frame once: 1 Arrow crossing total.
-    p = p.select("doc_id", "lang", "pp").localCheckpoint()
+    p = materialize(p.select("doc_id", "lang", "pp"))
     matrix = bucket_op.train_cutoff_matrix(p, pp_col="pp", lang_col="lang")
     cut = matrix.groupBy("lang").agg(
         F.max(F.when(F.col("pct") == 30, F.col("cutoff"))).alias("pp_head"),
@@ -1535,11 +1536,11 @@ def q_lm_selftrain_bucket(spark, sf_dir):
     train the bigram LM on the reference slice, score the remaining corpus,
     train the p30/p60 perplexity cutoffs from the scores, bucket the scored
     corpus head/middle/tail with the fresh broadcast cutoffs. `scored` is
-    localCheckpoint'd because it feeds both the cutoff aggregation and the
+    materialized because it feeds both the cutoff aggregation and the
     bucket join (two consumers would replay the explode+joins subtree)."""
     train, rest = _lm_split(spark, sf_dir)
     model = lm_op.train_bigram_lm(train)
-    scored = lm_op.score_bigram_pp(rest, model).localCheckpoint()
+    scored = materialize(lm_op.score_bigram_pp(rest, model))
     matrix = bucket_op.train_cutoff_matrix(scored, pp_col="lm_pp", lang_col="lang")
     cut = matrix.groupBy("lang").agg(
         F.max(F.when(F.col("pct") == 30, F.col("cutoff"))).alias("pp_head"),
@@ -1563,7 +1564,7 @@ def _nb_lid_labeled(spark):
     """LID-distillation corpus: 400 pairs' captions (lang-correlated by
     construction — synth draws them from models.VOCAB) labeled by the
     stub-LID teacher, with the numeric image-id suffix as the split key.
-    localCheckpoint'd: it feeds the trainer, the predict side AND the
+    materialized: it feeds the trainer, the predict side AND the
     final join, and the generator + pandas-UDF LID would otherwise replay
     per branch (r3 gotcha)."""
     from ccnet_spark_spark.operators import lid as lid_op
@@ -1573,7 +1574,7 @@ def _nb_lid_labeled(spark):
     labeled = lid_op.with_lang(pairs, "caption").select(
         "image_id", "caption", "lang", F.expr("cast(substring(image_id, 4) as int)").alias("_i")
     )
-    return labeled.localCheckpoint()
+    return materialize(labeled)
 
 
 def q_nb_lid_model(spark, sf_dir):
@@ -1666,7 +1667,7 @@ def _probe_train_weights(spark, sf_dir):
     # the labeled frame feeds BOTH the trainer aggregation and the scored
     # test half — without a checkpoint the pandas-UDF perplexity label
     # would recompute per consumer
-    labeled = labeled.localCheckpoint()
+    labeled = materialize(labeled)
     train = labeled.where(F.col("doc_id") % 2 == 0)
     return probe.train_ridge(train, "label", langs=_PROBE_LANGS), labeled
 
@@ -1773,7 +1774,7 @@ def q_bpe_encode(spark, sf_dir):
 def q_dsir_stream_score(spark, sf_dir):
     """Trained-model scoring AT INGEST — the production composition of the
     trainer family with Structured Streaming: the DSIR importance model
-    is trained once (batch), frozen with localCheckpoint, and every
+    is trained once (batch; train_dsir materializes its counts), and every
     arriving micro-batch of captions is scored inside foreachBatch with
     the SAME batch operator (score_dsir: broadcast model join +
     DECIMAL-sum per doc). foreachBatch is the right shape because the
@@ -1781,8 +1782,7 @@ def q_dsir_stream_score(spark, sf_dir):
     arrives whole in one batch row, so per-batch application is exact and
     the streamed output must equal the batch twin row-for-row."""
     target, raw = _dsir_corpora(spark)
-    trained = dsir_op.train_dsir(target, raw, text_col="caption")
-    frozen = dict(trained, model=trained["model"].localCheckpoint())
+    model = dsir_op.train_dsir(target, raw, text_col="caption")
     src, sink, ckpt = _stream_dirs("dsir_stream_score")
     raw.select("image_id", "caption").write.mode("append").parquet(src)
     stream = (
@@ -1792,7 +1792,7 @@ def q_dsir_stream_score(spark, sf_dir):
     )
 
     def score_batch(batch_df, _batch_id):
-        out = dsir_op.score_dsir(batch_df, frozen, text_col="caption", id_col="image_id")
+        out = dsir_op.score_dsir(batch_df, model, text_col="caption", id_col="image_id")
         out.write.mode("append").parquet(sink)
 
     q = (
@@ -1895,9 +1895,9 @@ def q_selfhost_chain(spark, sf_dir):
     )
     # stage 2: trained LM perplexity under the PREDICTED language
     lm_model = lm_op.train_bigram_lm(train, text_col="caption", lang_col="lang")
-    scored = lm_op.score_bigram_pp(
+    scored = materialize(lm_op.score_bigram_pp(  # feeds the cutoff agg AND the bucket join
         relabeled, lm_model, text_col="caption", lang_col="lang", id_col="image_id"
-    ).localCheckpoint()  # feeds the cutoff agg AND the bucket join
+    ))
     # stage 3: self-calibrated cutoffs + bucket
     matrix = bucket_op.train_cutoff_matrix(scored, pp_col="lm_pp", lang_col="lang")
     cut = matrix.groupBy("lang").agg(
@@ -1968,9 +1968,7 @@ def q_alignment_selfcal(spark, sf_dir):
     # checkpoint the narrow (id, lang, alignment) frame or the decode +
     # two embedding towers replay per consumer (the multi-consumer
     # gotcha, SCALE.md; measured 20 Python nodes -> 0 post-checkpoint)
-    scored = (
-        al.join(langs, "image_id").select("image_id", "lang", "alignment").localCheckpoint()
-    )
+    scored = materialize(al.join(langs, "image_id").select("image_id", "lang", "alignment"))
     cut = scored.groupBy(F.col("lang").alias("_cl")).agg(
         F.expr("percentile(alignment, 0.7)").alias("_cut")
     )
@@ -2190,7 +2188,7 @@ def q_pairs_release(spark, sf_dir):
     (copy rows derive their meta from their base rows), the
     independent-hashlib digest fixture, the two embedding-tower fixtures,
     the stub-LID twin and group_quota's twin. The deduped frame is
-    localCheckpoint'd — it feeds the keeper aggregation, both alignment
+    materialized — it feeds the keeper aggregation, both alignment
     towers and the LID branch (at 10^12 rows this is the persisted
     post-dedup stage table)."""
     from ccnet_spark_spark.operators import lid as lid_op
@@ -2211,7 +2209,7 @@ def q_pairs_release(spark, sf_dir):
     )
     corpus = base.unionByName(corrupt).unionByName(copies)
     gated = quarantine_passthrough(corpus).where(keep_expr())
-    hashed = gated.withColumn("_sha", F.sha2("bytes", 256)).localCheckpoint()
+    hashed = materialize(gated.withColumn("_sha", F.sha2("bytes", 256)))
     keepers = hashed.groupBy("_sha").agg(F.min("image_id").alias("image_id"))
     deduped = hashed.join(keepers, "image_id", "left_semi").drop("_sha")
     al = (
@@ -2228,7 +2226,7 @@ def q_pairs_release(spark, sf_dir):
     # UDF, both embedding towers, the digest dedup aggregation) plans and
     # executes twice (plan-audited: 6 Python stages -> 3, 18 exchanges ->
     # 9). At 10^12 scale this frame is the persisted pre-quota manifest.
-    final = langs.join(al, "image_id").localCheckpoint()
+    final = materialize(langs.join(al, "image_id"))
     return sample.group_quota(final, "lang", 10, id_col="image_id").select(
         "image_id", "lang"
     )
@@ -2275,7 +2273,7 @@ def q_cutoff_train(spark, sf_dir):
     # materialized so train_cutoff_matrix's not-null filter on the UDF
     # output can't duplicate the Python stage below the pushed filter
     # (guide §4.4 — plan-audited 4 ArrowEvalPython -> 1 for this query)
-    p = p.select("lang", "pp").localCheckpoint()
+    p = materialize(p.select("lang", "pp"))
     return bucket_op.train_cutoff_matrix(p, pp_col="pp", lang_col="lang")
 
 
@@ -2431,10 +2429,8 @@ def q_image_exact_dedup(spark, sf_dir):
     copies = base.where(F.col("image_id") < "img0000000025").select(
         F.concat(F.col("image_id"), F.lit("_copy")).alias("image_id"), "bytes"
     )
-    hashed = (
-        base.union(copies)
-        .select("image_id", F.sha2("bytes", 256).alias("payload_sha"))
-        .localCheckpoint()  # feeds both sides of the keeper semi-join
+    hashed = materialize(  # feeds both sides of the keeper semi-join
+        base.union(copies).select("image_id", F.sha2("bytes", 256).alias("payload_sha"))
     )
     keepers = hashed.groupBy("payload_sha").agg(F.min("image_id").alias("image_id"))
     return hashed.join(keepers, on=["image_id"], how="left_semi")
@@ -2461,7 +2457,7 @@ def q_phash_clusters(spark, sf_dir):
         F.concat(F.col("image_id"), F.lit("_top")).alias("image_id"),
         F.col("phash").bitwiseXOR(F.lit((1 << 50) | (1 << 55))).alias("phash"),
     )
-    corpus = base.union(low).union(top).localCheckpoint()
+    corpus = materialize(base.union(low).union(top))
     pairs = dedup.hash64_neardup_pairs(
         corpus, "image_id", "phash", prefix_bits=16, max_hamming=8, passes=2
     )
@@ -2529,7 +2525,7 @@ def q_datacomp_filter(spark, sf_dir):
     format/caption heuristics) AND caption-image alignment (CLIP-score
     analog) AND aesthetic/NSFW linear heads AND the boilerplate-caption
     budget, one row per pair with per-family verdicts. All four families
-    derive from ONE materialized scan (localCheckpoint — the payload
+    derive from ONE materialized scan (the payload
     would otherwise decode once per branch) and meet in id equi-joins.
     Oracle composes each family's existing twin (meta CASE-chain,
     embedding-fixture cosines, literal-weight heads, normalize+count)."""
@@ -2542,7 +2538,7 @@ def q_datacomp_filter(spark, sf_dir):
     from ccnet_spark_spark.operators.model_heads import model_score_gates
     from ccnet_spark_spark.synth import generate_pairs
 
-    pairs = generate_pairs(spark, 200).localCheckpoint()
+    pairs = materialize(generate_pairs(spark, 200))
     meta = pairs.select("image_id", keep_expr(ImageGateConfig()).alias("meta_keep"))
     align = multimodal.caption_image_alignment(pairs, tau=0.1).select("image_id", "aligned")
     model = model_score_gates(multimodal.image_embedding(pairs, dim=64)).select(
@@ -2577,7 +2573,7 @@ def q_pairs_pipeline_curated(spark, sf_dir):
     composition flagship: scan-predicate metadata gates -> boilerplate-
     caption budget (one window-count shuffle; 20 planted stock-caption
     copies over gate-passing rows MUST all drop at budget 10) -> model
-    gates (decode survivors ONCE: localCheckpoint'd image tower feeds
+    gates (decode survivors ONCE: materialized image tower feeds
     both the aesthetic/NSFW heads and the caption-image alignment
     cosine) -> the complete caption pipeline (min_len, global line
     dedup, stub LID, pp, bucket, scrub, verdict) over what survives.
@@ -2613,7 +2609,7 @@ def q_pairs_pipeline_curated(spark, sf_dir):
     # FoldablePropagation into the budget anti-join's left key, degrading
     # the equi hash join into a nested-loop existence probe (a test-corpus
     # artifact — real tables have no foldable caption column)
-    out = Pipeline(spark, cfg).run(base.unionByName(plants).localCheckpoint())
+    out = Pipeline(spark, cfg).run(materialize(base.unionByName(plants)))
     return out.select(
         "image_id",
         "lang",
@@ -2789,10 +2785,10 @@ def q_image_decontaminate(spark, sf_dir):
     predicate — no bucket simulation. Expected survivors: 400 - 30."""
     from ccnet_spark_spark.synth import generate_pairs
 
-    # localCheckpoint: the narrow (id, phash) projection feeds FIVE plan
+    # materialize: the narrow (id, phash) projection feeds FIVE plan
     # branches (four eval slices + the anti-join left side) — without it
     # each branch re-runs the pair generator incl. image payloads
-    base = generate_pairs(spark, 400).select("image_id", "phash").localCheckpoint()
+    base = materialize(generate_pairs(spark, 400).select("image_id", "phash"))
 
     def _slice(lo: int, hi: int, flip: int):
         return base.where(
@@ -2834,11 +2830,11 @@ def q_phash_neardup(spark, sf_dir):
         F.concat(F.col("image_id"), F.lit("_top")).alias("image_id"),
         F.col("phash").bitwiseXOR(F.lit((1 << 50) | (1 << 55))).alias("phash"),
     )
-    # localCheckpoint: the (id, phash) table is ~440 rows but feeds FOUR
+    # materialize: the (id, phash) table is ~440 rows but feeds FOUR
     # plan branches (two join sides x two rotation passes) — without it
     # each branch re-runs the full pair generator incl. image payloads
     # (measured 3.8 s -> 1.0 s warm)
-    corpus = base.union(low).union(top).localCheckpoint()
+    corpus = materialize(base.union(low).union(top))
     return dedup.hash64_neardup_pairs(
         corpus, "image_id", "phash", prefix_bits=16, max_hamming=8, passes=2
     )
@@ -3194,7 +3190,7 @@ def q_image_embed_neardup(spark, sf_dir):
     corpus = pairs.union(dups)
     # small (210 x 64-float) frame feeding a self-join: materialize so the
     # generator+decode+embed subtree doesn't execute once per join branch
-    emb = multimodal.image_embedding(corpus, dim=64).localCheckpoint()
+    emb = materialize(multimodal.image_embedding(corpus, dim=64))
     return similarity.embedding_near_dup(
         emb, "image_id", "embedding", threshold=0.9999, n_planes=6, dim=64
     )

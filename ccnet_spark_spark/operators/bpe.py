@@ -37,7 +37,7 @@ each row is a short symbol array):
   standard BPE (on a run like "a a a a" one non-rescanning pass yields
   [aa, a, a] where BPE's same-pass scan yields [aa, aa]);
 - the driver holds only the merge list (num_merges rows); the vocab
-  frame is localCheckpoint'd each round so the replayed lineage stays
+  frame is materialized each round so the replayed lineage stays
   flat, and the PREVIOUS round's checkpoint is unpersisted once the new
   one materializes — executor block storage holds one vocab copy, not
   num_merges copies.
@@ -62,7 +62,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.textstats import word_tokens_expr
-from ..session import local_frame, release_local_checkpoint
+from ..session import local_frame, materialize, release_local_checkpoint
 
 
 def build_word_vocab(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -144,10 +144,8 @@ def train_bpe(
     max(64, 8 * batch_size)."""
     if candidate_window is None:
         candidate_window = max(64, 8 * batch_size)
-    vocab = (
-        build_word_vocab(df, text_col)
-        .withColumn("sym", F.expr("filter(split(word, ''), x -> x != '')"))
-        .localCheckpoint()
+    vocab = materialize(
+        build_word_vocab(df, text_col).withColumn("sym", F.expr("filter(split(word, ''), x -> x != '')"))
     )
     merges: list[tuple[int, str, str, str, int]] = []
     while len(merges) < num_merges:
@@ -179,12 +177,12 @@ def train_bpe(
         for left, right, cnt in batch:
             merges.append((len(merges), left, right, left + right, cnt))
         prev = vocab
-        vocab = vocab.withColumn(
-            "sym", _make_merge_udf([(l, r) for l, r, _ in batch])(F.col("sym"))
-        ).localCheckpoint()
-        # the new checkpoint is materialized (localCheckpoint is eager);
-        # free the previous round's blocks so executor storage holds ONE
-        # vocab copy, not one per round
+        vocab = materialize(
+            vocab.withColumn("sym", _make_merge_udf([(l, r) for l, r, _ in batch])(F.col("sym")))
+        )
+        # the new checkpoint is computed (materialize is eager); free the
+        # previous round's blocks so executor storage holds ONE vocab copy,
+        # not one per round (the last round's belongs to the caller's scope)
         release_local_checkpoint(prev)
     merges_df = local_frame(
         spark, merges, "rank int, left string, right string, merged string, pair_count long"

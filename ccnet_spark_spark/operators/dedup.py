@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from ..functions import hashing
 from ..functions.normalize import normalize_for_dedup_expr
 from ..functions.textstats import word_tokens_expr, word_tokens_sql
+from ..session import materialize
 
 
 def _dedup_tokens(text_col: str) -> Column:
@@ -215,7 +216,7 @@ def minhash_lsh_candidates(sigs: DataFrame, id_col: str, num_bands: int = 4, row
     # signature table every production MinHash pipeline writes anyway
     # (~80 B/doc), the same discipline as corpus_build's survivor
     # snapshot.
-    real = real.select(id_col, "signature").localCheckpoint()
+    real = materialize(real.select(id_col, "signature"))
     banded = real.select(
         id_col, F.explode(hashing.band_keys_expr(F.col("signature"), num_bands, rows_per_band)).alias("band_key")
     )
@@ -278,7 +279,7 @@ def simhash_neardup_pairs(
     # column (guide §4.4) — plan-audited 12 ArrowEvalPython subtrees for
     # one logical UDF pass over a 3-branch union corpus. At scale this is
     # the persisted fingerprint table, same as the MinHash signatures.
-    hashed = df.select(F.col(id_col), simhash_udf(F.col(text_col)).alias("simhash")).localCheckpoint()
+    hashed = materialize(df.select(F.col(id_col), simhash_udf(F.col(text_col)).alias("simhash")))
     return hash64_neardup_pairs(hashed, id_col, "simhash", prefix_bits, max_hamming)
 
 
@@ -791,7 +792,7 @@ def incremental_dedup_bloom(
     # the sliver's broadcast distinct) — materialize once or the batch
     # scan + probe run three times per call (measured: BENCH.md,
     # "Bloom-prefiltered ingestion dedup in its winning regime")
-    probed = probed.localCheckpoint()
+    probed = materialize(probed)
     definitely_new = probed.where(~F.col("_bloom_hit")).drop("_bloom_hit")
     maybe = probed.where(F.col("_bloom_hit")).drop("_bloom_hit")
     committed = corpus_h.join(

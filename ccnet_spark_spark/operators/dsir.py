@@ -17,11 +17,12 @@ delta log-probs are rounded to 6dp and per-doc sums run over
 DECIMAL(20,6) (the engine's standard cross-engine float discipline).
 
 Scale: the model is ≤4096 rows — broadcast by construction. Training is
-two explode+groupBy passes (map-side combinable); the two corpus totals
-are bounded driver-side scalars (the nb_lid trainer's discipline — a
-1-row join would be a BroadcastNestedLoopJoin). Scoring is one
-broadcast equi-join + one groupBy. Selection ranks with the bucketed
-prefix count of operators/sample.prefix_sum (no single-task window).
+two explode+groupBy passes (map-side combinable), joined and materialized
+once; the two corpus totals are bounded driver-side scalars read from
+that frame (the nb_lid trainer's discipline — a 1-row join would be a
+BroadcastNestedLoopJoin). Scoring is one broadcast equi-join + one
+groupBy. Selection ranks with the bucketed prefix count of
+operators/sample.prefix_sum (no single-task window).
 """
 
 from __future__ import annotations
@@ -30,6 +31,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import hashing
+from ..session import materialize
 from .sample import prefix_sum
 
 N_HEX = 3
@@ -71,14 +73,14 @@ def train_dsir(
     at ct = cr = 0, as a closed-form constant."""
     ct = _bucket_counts(target_df, text_col).withColumnRenamed("c", "ct")
     cr = _bucket_counts(raw_df, text_col).withColumnRenamed("c", "cr")
-    n_target = ct.agg(F.sum("ct")).collect()[0][0] or 0
-    n_raw = cr.agg(F.sum("cr")).collect()[0][0] or 0
-    denom_t, denom_r = n_target + k * N_BUCKETS, n_raw + k * N_BUCKETS
-    joined = ct.join(cr, "bucket", "full_outer").select(
+    # <= 4096 rows feeding the totals below and the model: computed once
+    joined = materialize(ct.join(cr, "bucket", "full_outer").select(
         "bucket",
         F.coalesce("ct", F.lit(0)).alias("ct"),
         F.coalesce("cr", F.lit(0)).alias("cr"),
-    )
+    ))
+    n_target, n_raw = (t or 0 for t in joined.agg(F.sum("ct"), F.sum("cr")).collect()[0])
+    denom_t, denom_r = n_target + k * N_BUCKETS, n_raw + k * N_BUCKETS
     model = joined.withColumn(
         "delta_logp",
         F.round(F.log10((F.col("ct") + F.lit(k)).cast("double") / F.lit(denom_t)), 6)
@@ -116,10 +118,10 @@ def resample_topk(scored: DataFrame, n: int, id_col: str = "doc_id") -> DataFram
     """Deterministic top-n by (log_w desc, id asc): `rank` is the running
     row count over that order (sample.prefix_sum — bucketed, no
     single-task global window), kept while <= n. The narrow scored frame
-    is localCheckpoint'd: prefix_sum reads its input three times."""
+    is materialized: prefix_sum reads its input three times."""
     keys = [F.col("log_w").desc(), F.col(id_col).asc()]
     return (
-        prefix_sum(scored.localCheckpoint(), keys, F.lit(1), "rank")
+        prefix_sum(materialize(scored), keys, F.lit(1), "rank")
         .where(F.col("rank") <= n)
         .select(id_col, "n_grams", "log_w", F.col("rank").cast("int").alias("rank"))
     )

@@ -12,7 +12,7 @@ job.
 Algorithm: min-label propagation — each node repeatedly takes the minimum
 label among itself and its neighbors until fixpoint; converges in
 O(component diameter) rounds, each round ONE join + ONE groupBy. Labels
-are localCheckpoint'd per round to truncate the growing lineage (a
+are materialized per round to truncate the growing lineage (a
 production run on unreliable executors would use reliable checkpointing;
 the loop itself is the standard large-scale CC shape — the driver holds
 only the changed-count scalar, never the graph). Web-dup components are
@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import release_local_checkpoint
+from ..session import materialize, release_local_checkpoint
 
 
 def connected_components(
@@ -42,7 +42,7 @@ def connected_components(
     sym = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).union(
         edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
     )
-    sym = sym.localCheckpoint()
+    sym = materialize(sym)
     # init = the result of one propagation round from the identity
     # labeling, computed as ONE aggregation (least(u, min(v)) per u) with
     # no join — a full round's work for the price of the node-distinct the
@@ -65,18 +65,18 @@ def connected_components(
             .select(F.col("u").alias("node"), "lbl", F.lit(False).alias("_own"))
         )
         own = labels.select("node", "lbl", F.lit(True).alias("_own"))
-        propagated = (
+        propagated = materialize(
             neigh.unionByName(own)
             .groupBy("node")
             .agg(
                 F.min("lbl").alias("lbl"),
                 F.max(F.when(F.col("_own"), F.col("lbl"))).alias("_prev"),
             )
-            .localCheckpoint()
         )
-        # `propagated` is materialized (eager localCheckpoint): release the
+        # `propagated` is computed (materialize is eager): release the
         # prior round's label blocks so storage holds one label copy, not
-        # one per round (same cleanup as the BPE trainer)
+        # one per round (same cleanup as the BPE trainer; the last round's
+        # belongs to the caller's scope)
         if prev_ckpt is not None:
             release_local_checkpoint(prev_ckpt)
         prev_ckpt = propagated

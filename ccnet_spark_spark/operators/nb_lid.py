@@ -38,6 +38,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
+from ..session import materialize
+
 
 def char_ngrams_expr(text_col: Column, n: int = 3) -> Column:
     """Character n-grams as built-in expressions: substring windows at
@@ -77,7 +79,7 @@ def train_nb_lid(
     # (the vocab-size count below, totals, and grams' join of both);
     # without materialization each consumer replays the corpus explode +
     # aggregation — plan-audited: the full gram scan ran 4x per train call.
-    counts = events.groupBy("lang", "gram").agg(F.count(F.lit(1)).alias("c")).localCheckpoint()
+    counts = materialize(events.groupBy("lang", "gram").agg(F.count(F.lit(1)).alias("c")))
     v = counts.select("gram").distinct().count()
     n_total = labeled.count()
     totals = counts.groupBy("lang").agg(F.sum("c").alias("n_events"))

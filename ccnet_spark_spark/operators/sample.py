@@ -20,7 +20,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.classic.column import Column as ClassicColumn
 
-from ..session import local_frame
+from ..session import local_frame, materialize
 
 
 def _threshold_hex(rate_256: int) -> str:
@@ -453,14 +453,14 @@ def token_budget_select(
     distinct scores. INTEGER costs (token counts) keep every partial sum
     exact, equal to the DuckDB twin's global running sum. NULL and NaN
     score/cost rows are excluded (a NaN orders differently per engine).
-    The narrow (id, score, cost) input is localCheckpoint'd: prefix_sum
+    The narrow (id, score, cost) input is materialized: prefix_sum
     reads it three times (sample, bucket windows, bucket totals)."""
-    base = df.where(
+    base = materialize(df.where(
         F.col(score_col).isNotNull()
         & F.col(cost_col).isNotNull()
         & ~F.isnan(F.col(score_col).cast("double"))
         & ~F.isnan(F.col(cost_col).cast("double"))
-    ).localCheckpoint()
+    ))
     keys = [F.col(score_col).desc(), F.sha2(F.col(id_col).cast("string"), 256), id_col]
     return prefix_sum(base, keys, cost_col, "_cum").where(F.col("_cum") <= int(budget)).drop("_cum")
 

@@ -26,6 +26,7 @@ from ..functions.scrub import scrub_expr
 from ..operators import bucket as bucket_op
 from ..operators import dedup, lid, perplexity, tokenize, verdict
 from ..operators.length import DEFAULT_MIN_LEN
+from ..session import materialize
 
 # Step names (superset of the reference enum; scrub/verdict are north_rule
 # additions).
@@ -115,7 +116,7 @@ class Config:
     # boilerplate-caption budget (ONE window-count shuffle over gate
     # survivors — drop captions repeated on more than `caption_budget`
     # images; NULL captions exempt), then the model gates (decode gate+
-    # budget survivors ONCE -> image tower, localCheckpoint'd because it
+    # budget survivors ONCE -> image tower, materialized because it
     # feeds both the aesthetic/NSFW linear heads and the caption-image
     # alignment cosine). Requires the pair schema (image_id, bytes, fmt).
     caption_budget: int | None = None
@@ -187,17 +188,16 @@ class Pipeline:
             # never matches, so left_anti keeps them. Counts are over the
             # current survivor set, preserving the cascade order.
             key = F.xxhash64(normalize_for_dedup_expr(F.col(text_col)))
-            flagged = (
+            # materialize ONCE: df feeds several downstream branches
+            # (model towers, the main chain), and without this each
+            # branch would re-run the caption scan + aggregate
+            # (plan-audited: 4x _cap_key exchanges before, 1 after)
+            flagged = materialize(
                 df.where(F.col(text_col).isNotNull())
                 .groupBy(key.alias("_cap_key"))
                 .agg(F.count(F.lit(1)).alias("_cap_n"))
                 .where(F.col("_cap_n") > cfg.caption_budget)
                 .select("_cap_key")
-                # materialize ONCE: df feeds several downstream branches
-                # (model towers, the main chain), and without this each
-                # branch would re-run the caption scan + aggregate
-                # (plan-audited: 4x _cap_key exchanges before, 1 after)
-                .localCheckpoint()
             )
             df = df.join(flagged, key == F.col("_cap_key"), "left_anti")
         if cfg.model_gates:
@@ -228,18 +228,17 @@ class Pipeline:
                 # fused form's real cost at scale: it materializes
                 # payload rows, where the join form checkpoints only the
                 # 64-float embedding sidecar.
-                df = (
+                df = materialize(
                     model_gate_passthrough(df, tau=cfg.align_tau)
                     .where(F.col("model_keep") & F.col("aligned"))
                     .drop("model_keep", "aligned")
-                    .localCheckpoint()
                 )
             else:
                 # decode ONCE: the image tower feeds both heads and
                 # alignment, so it is materialized (id + 64 floats per
                 # survivor — tiny next to the payload; at 10^12 scale this
                 # is the embedding sidecar you would persist anyway)
-                emb = image_embedding(df, dim=64).localCheckpoint()
+                emb = materialize(image_embedding(df, dim=64))
                 heads_keep = model_score_gates(emb).where(F.col("model_keep")).select(id_col)
                 align_keep = (
                     caption_image_alignment(df, tau=cfg.align_tau, img_emb=emb)
@@ -269,7 +268,7 @@ class Pipeline:
             # side of the re-join below — without a checkpoint the whole
             # upstream subtree (line dedup, regroup) is planned and
             # executed twice (same double-execution corpus_build fixed)
-            enriched = enriched.localCheckpoint()
+            enriched = materialize(enriched)
             trimmed = passages_op.trim_duplicate_passages(
                 enriched, id_col, "dedup_caption", gram_n=cfg.passage_gram_n
             )
@@ -286,7 +285,7 @@ class Pipeline:
                 # the predict side branches off `enriched` and joins back —
                 # checkpoint first or the upstream dedup subtree replays
                 # per consumer (the r3 multi-branch gotcha)
-                enriched = enriched.localCheckpoint()
+                enriched = materialize(enriched)
                 model = nb_lid_op.load_model(self.spark, cfg.lid_artifact)
                 lang_values = sorted(r.lang for r in model["langs"].select("lang").collect())
                 pred = nb_lid_op.predict_nb_lid(
@@ -324,7 +323,7 @@ class Pipeline:
                 # upstream subtree (incl. a pandas-UDF LID stage) replays
                 from ..operators import lm as lm_op
 
-                enriched = enriched.localCheckpoint()
+                enriched = materialize(enriched)
                 model = lm_op.load_model(self.spark, cfg.lm_artifact)
                 scored = lm_op.score_bigram_pp(
                     enriched.select(id_col, "dedup_caption", "lang"),

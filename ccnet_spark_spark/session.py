@@ -11,6 +11,7 @@ and optional Iceberg catalog wiring gated on the runtime jar being present.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -67,6 +68,40 @@ def release_local_checkpoint(df) -> None:
         df._jdf.queryExecution().analyzed().rdd().unpersist(False)
     except Exception:
         pass
+
+
+# one frame list per open query_scope, innermost last
+_scopes: list[list[DataFrame]] = []
+
+
+def materialize(df: DataFrame) -> DataFrame:
+    """Eagerly compute `df` into executor storage (``localCheckpoint()``)
+    and return the frame that reads it back — the one place the engine
+    pins a frame with several consumers so its subtree runs once. Inside
+    a ``query_scope()`` the frame is recorded in the innermost scope,
+    which frees it on exit; outside any scope nothing is recorded and
+    the blocks live until the Dataset is garbage-collected."""
+    out = df.localCheckpoint()
+    if _scopes:
+        _scopes[-1].append(out)
+    return out
+
+
+@contextmanager
+def query_scope():
+    """Free, on exit (an exception included), every frame `materialize`
+    returned inside this scope but not inside a nested one — a nested
+    scope frees only its own frames. A frame materialized inside the
+    scope, or any plan reading it, cannot be used after the scope ends.
+    Yields the list of frames recorded so far."""
+    frames: list[DataFrame] = []
+    _scopes.append(frames)
+    try:
+        yield frames
+    finally:
+        _scopes[:] = [s for s in _scopes if s is not frames]  # by identity: lists compare by value
+        for df in frames:
+            release_local_checkpoint(df)
 
 
 def local_frame(spark: SparkSession, rows, schema) -> DataFrame:

@@ -1,5 +1,5 @@
-"""Round-5 additions: batched BPE training, localCheckpoint storage
-release, and StagedParquetWriter isolation/empty-write fixes."""
+"""Round-5 additions: batched BPE training and StagedParquetWriter
+isolation/empty-write fixes."""
 
 from __future__ import annotations
 
@@ -99,47 +99,6 @@ def test_bpe_batch1_unchanged(spark):
         for r in merges.orderBy("rank").collect()
     ]
     assert got == [(0, "a", "b", 5), (1, "ab", "c", 2), (2, "z", "z", 1)]
-
-
-# ------------------------------------------------- localCheckpoint release
-
-
-def test_release_local_checkpoint_frees_blocks(spark):
-    """Dataset.unpersist() does NOT free localCheckpoint blocks (verified:
-    they stay in getRDDStorageInfo); release_local_checkpoint must.
-    Tracks the checkpoint's OWN rdd id — total storage-entry counts are
-    flaky (the ContextCleaner may concurrently drop older entries)."""
-    from ccnet_spark_spark.session import release_local_checkpoint
-
-    def cached_ids():
-        info = spark.sparkContext._jsc.sc().getRDDStorageInfo()
-        return {i.id() for i in info if i.numCachedPartitions() > 0}
-
-    a = spark.range(10000).selectExpr("id", "id * 2 as x").localCheckpoint()
-    rid = a._jdf.queryExecution().analyzed().rdd().id()
-    assert rid in cached_ids()
-    release_local_checkpoint(a)
-    assert rid not in cached_ids()
-    # best-effort: a non-checkpointed frame is a silent no-op
-    release_local_checkpoint(spark.range(5))
-
-
-def test_bpe_trainer_releases_round_checkpoints(spark):
-    """After training, executor storage must NOT hold one vocab copy per
-    merge round — only the final checkpoint survives."""
-    from ccnet_spark_spark.operators import bpe
-
-    def n_cached():
-        info = spark.sparkContext._jsc.sc().getRDDStorageInfo()
-        return len([i for i in info if i.numCachedPartitions() > 0])
-
-    base = n_cached()
-    docs = spark.createDataFrame(
-        [(1, "ab ab ab abc abc zz xyzw xyzw qrst")], ["doc_id", "text"]
-    )
-    merges, vocab = bpe.train_bpe(spark, docs, "text", num_merges=6, batch_size=1)
-    assert merges.count() >= 4  # several rounds actually ran
-    assert n_cached() <= base + 1  # only the final vocab checkpoint remains
 
 
 # ------------------------------------------------ bloom probe strategies

@@ -40,7 +40,7 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
 
 def main():
     import __spark_entry__ as entrymod
-    from ccnet_spark_spark.session import get_spark
+    from ccnet_spark_spark.session import get_spark, query_scope
 
     spark = get_spark(cores=16)
     con = duckdb.connect()
@@ -70,7 +70,8 @@ def main():
         if only and name not in only:
             continue
         try:
-            sdf = fn(spark, SF_DIR).toPandas()
+            with query_scope():  # frees what the query materialized
+                sdf = fn(spark, SF_DIR).toPandas()
         except Exception as e:
             print(f"FAIL  {name}: spark raised {type(e).__name__}: {e}")
             failures.append(name)

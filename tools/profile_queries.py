@@ -5,13 +5,14 @@ Usage: python tools/profile_queries.py [--sf DIR] [--passes N] [--plans DIR] LEA
 Runs the named ``__spark_entry__.queries()`` leaves over the tables in DIR,
 in one Spark session with the event log on. Each pass is a span
 ``<leaf>#<pass>`` with children ``build`` (the plan build, eager jobs
-included) and ``action`` (``toPandas()``). After the session stops it
-prints the layer table, then one counter row per pass: rows; build_s and
-the py4j calls of the build; Janino compiles; py_tasks, the tasks of
-stages whose RDDs are a PythonRDD or sit under a Python/Pandas/Arrow
-scope; py_cpu_s, the CPU of the JVM's descendants (the Python worker
-daemon and its workers); and catalyst_ms, the analysis, optimization and
-planning phases of the executed plan.
+included) and ``action`` (``toPandas()``); what a pass materializes
+(``session.materialize``) is freed when the pass ends. After the session
+stops it prints the layer table, then one counter row per pass: rows;
+build_s and the py4j calls of the build; Janino compiles; py_tasks, the
+tasks of stages whose RDDs are a PythonRDD or sit under a
+Python/Pandas/Arrow scope; py_cpu_s, the CPU of the JVM's descendants
+(the Python worker daemon and its workers); and catalyst_ms, the
+analysis, optimization and planning phases of the executed plan.
 
 Pass 1 of the first leaf is cold. ``--plans DIR`` writes DIR/<leaf>.txt,
 the formatted physical plan of the leaf's first build; ``--passes 0``
@@ -92,7 +93,7 @@ def main() -> None:
     args = ap.parse_args()
 
     import __spark_entry__ as entry
-    from ccnet_spark_spark.session import get_spark
+    from ccnet_spark_spark.session import get_spark, query_scope
 
     qs = entry.queries()
     unknown = [q for q in args.leaves if q not in qs]
@@ -114,7 +115,7 @@ def main() -> None:
     tracer, counters = harness.Tracer(sc), []
     for leaf in args.leaves:
         for i in range(1, args.passes + 1) if args.passes > 0 else (0,):
-            with tracer.span(f"{leaf}#{i}") as span:
+            with tracer.span(f"{leaf}#{i}") as span, query_scope():
                 compiles0 = codegen.getCount()
                 py_cpu0 = python_cpu_s(jvm_pid)
                 with tracer.span("build") as build:
